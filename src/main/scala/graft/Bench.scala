@@ -5,72 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Driver benchmark harness: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query wall seconds.
   * Queries run in sorted name order after a small uncounted JVM warm-up so
-  * first-query JIT noise doesn't land on an arbitrary query. */
+  * first-query JIT noise doesn't land on an arbitrary query; each is timed
+  * by [[Session.fullRow]] on a [[Session.local]] session. */
 object Bench {
-  /** The measured action: force FULL-ROW evaluation by hashing every
-    * column into one aggregate (ScaleCheck's ForceQ rule). A bare
-    * `.count()` is NOT an honest measure: Catalyst deletes left joins
-    * against grouped-by-key relations (and the columns feeding them)
-    * when no output column is consumed — a round-17 probe found 47 of
-    * 248 queries lose joins under count(), 15 of them COLLAPSING to a
-    * bare scan (dup_span_incremental's count-plan was one parquet scan
-    * of doc_id — the bench would have reported a 22 s classification
-    * query as 2.4 s). Map-typed columns are excluded from the hash
-    * (xxhash64 rejects MapType); if nothing is hashable the action
-    * falls back to count(). SPARK_GRAFT_BENCH_COUNTRULE=1 restores the
-    * pre-round-17 count() rule for apples-to-apples continuity
-    * captures against old trees. */
-  private def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: MapType => true
-      case a: ArrayType => hasMap(a.elementType)
-      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
-      case _ => false
-    }
-  }
-  private val countRule = sys.env.get("SPARK_GRAFT_BENCH_COUNTRULE")
-    .exists(_ == "1")
-  private def benchAction(df: org.apache.spark.sql.DataFrame): Unit = {
-    // escape backticks inside names: a raw backtick would terminate the
-    // quoted identifier early and misreport the query as FAILED
-    val hashable = df.schema.fields
-      .filterNot(f => hasMap(f.dataType))
-      .map(f => s"`${f.name.replace("`", "``")}`")
-    if (countRule || hashable.isEmpty) { df.count(); () }
-    else {
-      df.selectExpr(s"bit_xor(xxhash64(${hashable.mkString(", ")})) AS h",
-        "count(*) AS n").collect()
-      ()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Scan-parallelism floor (guide §6): the test tables are single
-      // parquet files of a few MB, far below maxPartitionBytes (128 MB),
-      // so without a floor EVERY scan-side stage — scan + expand +
-      // partial aggregate + explode, i.e. the bulk of most queries —
-      // planned as ONE task and ran single-threaded on a 32-core
-      // session (round-19 profile: approx_sketches spent 8 s in 18
-      // tasks). minPartitionNum is scale-adaptive by construction
-      // (derived from the session's core count, not a tuned constant):
-      // bytesPerCore = totalBytes/minPartitionNum only LOWERS the split
-      // size when files are small relative to cores — at production
-      // scale splits abound and the floor is a no-op, and the 512 KB
-      // open-cost keeps genuinely tiny tables at one task. Same floor
-      // as a cluster deployment would set (defaultParallelism).
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.openCostInBytes", (512 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     // Uncounted JIT/codegen warm-up: exercise the hot code paths (hash agg,
     // parquet scan, window, join) on tiny sf0.001 data so one-time class
@@ -125,18 +65,6 @@ object Bench {
       System.err.println(s"[bench] WARM-UP SKIPPED (${e.getMessage}) — " +
         "first-query timing will include JIT/codegen cost")
     }
-
-    // Optional cache-release ladder (off by default so round-over-round
-    // benches stay comparable): SPARK_GRAFT_RELEASE_EVERY=N unpersists the
-    // whole session-cache registry at every Nth query boundary. This is
-    // the memory-ceiling control for constrained heaps — the r12 scale
-    // finding: four cache-heavy families back-to-back at the 100× corpus
-    // OOM an 8 GB session when 32 concurrent hash builds land on top of
-    // accumulated registries; a release boundary trades rebuild time for
-    // a bounded peak. The released queries then pay their cold builds
-    // again, which is exactly the trade the flag's presence documents.
-    val releaseEvery = sys.env.get("SPARK_GRAFT_RELEASE_EVERY")
-      .map(_.toInt).filter(_ > 0)
 
     // Family cache boundaries: these cached relations are consumed ONLY
     // inside their name-prefix wave of the sorted walk, so once the walk
@@ -219,15 +147,9 @@ object Bench {
     val sortedQs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val results = sortedQs.zipWithIndex.map { case ((name, fn), i) =>
-      releaseEvery.foreach { n =>
-        if (i > 0 && i % n == 0) {
-          graft.queries.Util.releaseCaches(spark)
-          System.err.println(s"[bench] cache release boundary before #$i")
-        }
-      }
       val t0 = System.nanoTime()
       val ok =
-        try { benchAction(fn(spark, sfDir)); true }
+        try { Session.fullRow(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
         }

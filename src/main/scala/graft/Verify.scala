@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,21 +15,14 @@ object Verify {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // PIN the LSH signature width to the oracle twin's generation width:
-      // the DuckDB SQL for ann_lsh_cosine is emitted at 16 bits, while the
-      // Spark side otherwise derives width from corpus size — a larger
-      // verify corpus would silently flip Spark to 18 bits and fail the
-      // hash compare confusingly. Correctness runs must never depend on
-      // the size heuristic.
-      .config("graft.lsh.bits", "16")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session, so the oracle checks the configuration Bench times.
+    // PIN the LSH signature width to the oracle twin's generation width:
+    // the DuckDB SQL for ann_lsh_cosine is emitted at 16 bits, while the
+    // Spark side otherwise derives width from corpus size — a larger
+    // verify corpus would silently flip Spark to 18 bits and fail the
+    // hash compare confusingly. Correctness runs must never depend on
+    // the size heuristic.
+    val spark = Session.local(Session.cpus, "graft.lsh.bits" -> "16")
     require(graft.queries.SimilarityOps.lshBitsFor(spark, sfDir) == 16,
       "verify contract: graft.lsh.bits must resolve to the oracle width (16)")
     // The DuckDB oracle twins are STATIC SQL interpolating each cap/knob's

@@ -134,8 +134,7 @@ object CanonNorm {
   * replacements and both start positions must be the exact literals of
   * the canon rule (any other regex keeps the general RegExpReplace), and
   * the trim must be the no-trimStr form (trim-of-spaces). Injected
-  * alongside [[RewriteSizeOfIntersect]] via [[GraftFunctions.register]]
-  * and [[GraftExtensions]]. */
+  * alongside [[RewriteSizeOfIntersect]] via [[GraftFunctions.register]]. */
 object RewriteCanonNorm extends Rule[LogicalPlan] {
   private val classPat = UTF8String.fromString("[^a-z0-9 ]")
   private val emptyRep = UTF8String.fromString("")

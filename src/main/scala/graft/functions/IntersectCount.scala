@@ -148,8 +148,7 @@ object IntersectCount {
   *    analysis-level oddity this rule should not touch).
   *
   * Injected per-session via `spark.experimental.extraOptimizations`
-  * ([[GraftFunctions.register]]) and via [[GraftExtensions]] for sessions
-  * built with `spark.sql.extensions`. */
+  * ([[GraftFunctions.register]]). */
 object RewriteSizeOfIntersect extends Rule[LogicalPlan] {
   private def ok(e: Expression): Boolean = e.dataType match {
     case ArrayType(StringType, _) => true

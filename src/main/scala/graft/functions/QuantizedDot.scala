@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression: exact int64 dot product of two
   * `array<bigint>` columns (quantized embedding vectors).
@@ -80,8 +79,9 @@ case class QuantizedDot(left: Expression, right: Expression)
 object GraftFunctions {
 
   /** Exact int64 dot product of two array<bigint> columns (codegen'd).
-    * Resolves through the session FunctionRegistry — call [[register]] on
-    * the session first (query fns below do it idempotently). */
+    * Resolves through the session FunctionRegistry: [[register]] has run on
+    * every session from [[graft.Session.local]] and on every session that
+    * reads a table through [[graft.queries.Util.t]]. */
   def quantized_dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("quantized_dot", a, b)
 
@@ -90,49 +90,31 @@ object GraftFunctions {
     "intersect_count" -> (exprs => IntersectCount(exprs.head, exprs(1))),
     "canon_norm" -> (exprs => CanonNorm(exprs.head)))
 
-  /** Make the functions callable from SQL in an existing session, and
-    * inject [[RewriteSizeOfIntersect]] into the session's optimizer (the
-    * public `experimental.extraOptimizations` hook works on an ALREADY
-    * BUILT session — no SparkSessionExtensions rebuild needed — and the
-    * idempotence guard keeps repeated register() calls from stacking the
-    * rule). */
-  def register(spark: SparkSession): Unit = {
-    registry.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    val withIntersect = {
-      val cur = spark.experimental.extraOptimizations
-      if (cur.contains(RewriteSizeOfIntersect)) cur
-      else cur :+ RewriteSizeOfIntersect
-    }
-    spark.experimental.extraOptimizations =
-      if (withIntersect.contains(RewriteCanonNorm)) withIntersect
-      else withIntersect :+ RewriteCanonNorm
-  }
-}
+  /** Sessions whose registration is complete (weak so a stopped session
+    * can be collected, like [[graft.queries.Util]]'s drop-logger set). */
+  private val registered = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-/** SparkSessionExtensions hook: sessions built with
-  * `.withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) get the engine
-  * functions as first-class SQL functions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("quantized_dot"),
-      new ExpressionInfo(classOf[QuantizedDot].getName, "quantized_dot"),
-      (exprs: Seq[Expression]) => QuantizedDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("intersect_count"),
-      new ExpressionInfo(classOf[IntersectCount].getName, "intersect_count"),
-      (exprs: Seq[Expression]) => IntersectCount(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("canon_norm"),
-      new ExpressionInfo(classOf[CanonNorm].getName, "canon_norm"),
-      (exprs: Seq[Expression]) => CanonNorm(exprs.head)))
-    e.injectOptimizerRule(_ => RewriteSizeOfIntersect)
-    e.injectOptimizerRule(_ => RewriteCanonNorm)
-    // whole-operator extension (class (c)): the native as-of merge join
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+  /** Install the engine into an already-built session, once: the
+    * functions above become callable from SQL, [[RewriteSizeOfIntersect]]
+    * and [[RewriteCanonNorm]] join the optimizer and
+    * [[graft.plans.AsOfJoinStrategy]] the planner (the public `experimental`
+    * hooks need no SparkSessionExtensions rebuild). The lock covers threads
+    * sharing one session, and a session is marked only once all of it is
+    * installed, so no caller sees it half-registered. */
+  def register(spark: SparkSession): Unit = registered.synchronized {
+    if (!registered.contains(spark)) {
+      registry.foreach { case (name, builder) =>
+        spark.sessionState.functionRegistry
+          .createOrReplaceTempFunction(name, builder, "built-in")
+      }
+      val exp = spark.experimental
+      exp.extraOptimizations = exp.extraOptimizations ++
+        Seq(RewriteSizeOfIntersect, RewriteCanonNorm)
+          .filterNot(exp.extraOptimizations.contains)
+      if (!exp.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
+        exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
+      registered.add(spark)
+    }
   }
 }

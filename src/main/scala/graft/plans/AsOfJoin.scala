@@ -144,18 +144,9 @@ case class AsOfJoinExec(
   }
 }
 
-/** Engine API + session wiring for the native as-of join. */
+/** Engine API for the native as-of join; [[graft.functions.GraftFunctions.register]]
+  * installs its planner strategy. */
 object GraftAsOf {
-
-  /** Idempotently add the planner strategy to an already-built session
-    * (the GraftFunctions.register contract); sessions built with
-    * `spark.sql.extensions=graft.functions.GraftExtensions` get it at
-    * build time via injectPlannerStrategy instead. */
-  def register(s: SparkSession): Unit = synchronized {
-    val exp = GraftPlanShim.experimental(s)
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-  }
 
   /** AS-OF join `probe` to `quotes`: for each probe row, the quote row with
     * the greatest `quoteTime` ≤ `probeTime` on equal keys; NULL quote
@@ -184,7 +175,6 @@ object GraftAsOf {
       probeTime: String, quoteTime: String,
       validate: Boolean = false): DataFrame = {
     val s = probe.sparkSession
-    register(s)
     require(probeKeys.length == quoteKeys.length && probeKeys.nonEmpty,
       s"asof: probe/quote key lists must be non-empty and same-length " +
         s"(got ${probeKeys.length} vs ${quoteKeys.length})")

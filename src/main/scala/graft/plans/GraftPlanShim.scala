@@ -10,7 +10,4 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftPlanShim {
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
-
-  def experimental(s: SparkSession): ExperimentalMethods =
-    s.asInstanceOf[classic.SparkSession].experimental
 }

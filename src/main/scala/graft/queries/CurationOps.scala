@@ -419,7 +419,6 @@ object CurationOps {
     * from the session-cached [[SimilarityOps.ivfServeAssigned]]
     * inverted lists (one cheap broadcast join on top of the cache). */
   private def centAssigned(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     SimilarityOps.ivfServeAssigned(s, dir)
       .join(broadcast(SimilarityOps.ivfServeCents(s, dir)), "cent_id")
       .withColumn("ccos", dotQ(col("q"), col("cq")).cast("double") /

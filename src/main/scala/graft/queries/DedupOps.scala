@@ -23,6 +23,12 @@ import Util._
   */
 object DedupOps {
 
+  /** The audits and the increment split run on the `doc_id % sampleMod`
+    * slice of the corpus: `= 0` is the sample (the increment), `<> 0` the
+    * rest. The SQL twins interpolate the same constant. */
+  private val sampleMod = 10
+  private def inSample: Column = col("doc_id") % sampleMod === 0
+
   /** Per-bucket candidate cap for the simhash band join: a (band, value)
     * bucket larger than this is dropped from candidate generation and
     * logged. 100 TB rationale: the all-zero band shared by short docs is a
@@ -171,7 +177,7 @@ object DedupOps {
     * intersection via shingle equi-join (not all-pairs), jaccard in exact
     * milli units. Sampled (doc_id % 10 = 0) to bound candidate volume. */
   private def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val docs = t(s, dir, "documents").filter(inSample)
     val sh = trigramShingles(docs)
     // df-cap the join key: a shingle shared by > maxTokenDf docs is the
     // quadratic key at web scale — drop it and log the drop. The drop is
@@ -208,7 +214,7 @@ object DedupOps {
   }
 
   private val ngramJaccardPairsSql =
-    s"""WITH docs AS (SELECT doc_id, string_split(text,' ') w FROM documents WHERE doc_id % 10 = 0),
+    s"""WITH docs AS (SELECT doc_id, string_split(text,' ') w FROM documents WHERE doc_id % $sampleMod = 0),
        |sh AS ($trigramShinglesSql),
        |sizes AS (SELECT doc_id, COUNT(*) n FROM sh GROUP BY 1),
        |pairs AS (
@@ -280,7 +286,7 @@ object DedupOps {
   private def sharedMinhashSigsSampled(s: SparkSession, dir: String): DataFrame =
     Util.cachedRelation(s, dir, "minhashSigsCc", "")(
       minhashSignaturesOf(
-        t(s, dir, "documents").filter(col("doc_id") % 10 === 0)))
+        t(s, dir, "documents").filter(inSample)))
 
   /** Band relation from an ALREADY-BUILT signature frame — split out so a
     * caller holding a cached m0..m15 relation (the estimator audit) can
@@ -448,7 +454,7 @@ object DedupOps {
 
   private def simhashPairsUncached(s: SparkSession, dir: String): DataFrame = {
     val sums = simhashSums(
-      t(s, dir, "documents").filter(col("doc_id") % 10 === 0))
+      t(s, dir, "documents").filter(inSample))
     val bandCols = (0 until 4).map { m =>
       (0 until 16).map { k =>
         when(col(s"s${16 * m + k}") >= 0, 1 << k).otherwise(0)
@@ -520,7 +526,7 @@ object DedupOps {
         s") AS b$m"
     }.mkString(",\n  ")
     s"""sx_w AS (SELECT DISTINCT doc_id, s AS w
-       |         FROM (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0) sx_d,
+       |         FROM (SELECT doc_id, text FROM documents WHERE doc_id % $sampleMod = 0) sx_d,
        |              UNNEST(string_split(text,' ')) t(s)),
        |sx_digits AS (SELECT doc_id, $digitDefs FROM (SELECT doc_id, md5(w) h FROM sx_w)),
        |sx_sums AS (SELECT doc_id, $sumDefs FROM sx_digits GROUP BY doc_id),
@@ -594,7 +600,7 @@ object DedupOps {
     * registered but never materialized; [[connectedComponents]] releases
     * it once edges checkpoint. */
   def ccEdgeDiscovery(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val docs = t(s, dir, "documents").filter(inSample)
     // candidate edges from the MinHash band relation: equi-join on the
     // bucket key (band, band_sig), buckets beyond maxCcBucket dropped from
     // one side (bucket membership is a key property, so one side kills the
@@ -696,7 +702,7 @@ object DedupOps {
       })
     }
   private def ccLabelsUncached(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val docs = t(s, dir, "documents").filter(inSample)
     // session-cached checkpoint; bl released inside ccEdges
     ccFixpointLoop(docs.select(col("doc_id").as("node")), ccEdges(s, dir))
   }
@@ -809,7 +815,7 @@ object DedupOps {
   }
 
   private val ccEdgesSqlCtes: String = {
-    s"""d AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+    s"""d AS (SELECT doc_id, text FROM documents WHERE doc_id % $sampleMod = 0),
       |${minhashBandsSqlCte("", "d")},
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -874,7 +880,7 @@ object DedupOps {
 
   private def crossSourceLeakage(s: SparkSession, dir: String): DataFrame = {
     val edges = ccEdges(s, dir)
-    val src = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val src = t(s, dir, "documents").filter(inSample)
       .select(col("doc_id"), coalesce(col("source"), lit("")).as("source"))
     edges
       .join(src.select(col("doc_id").as("a_id"), col("source").as("sa")), "a_id")
@@ -891,7 +897,7 @@ object DedupOps {
   private val crossSourceLeakageSql =
     s"""WITH $ccEdgesSqlCtes,
       |src AS (SELECT doc_id, COALESCE(source, '') AS source
-      |        FROM documents WHERE doc_id % 10 = 0),
+      |        FROM documents WHERE doc_id % $sampleMod = 0),
       |pairs AS (
       |  SELECT
       |    CASE WHEN sa.source <= sb.source THEN sa.source ELSE sb.source END
@@ -996,7 +1002,7 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     val comp = ccLabels(s, dir)
       .select(col("node").as("doc_id"), col("label").as("component"))
-    val toks = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val toks = t(s, dir, "documents").filter(inSample)
       .select(col("doc_id"),
         size(filter(split(col("text"), " "), x => x =!= "")).cast("long")
           .as("n_tokens"))
@@ -1061,7 +1067,7 @@ object DedupOps {
     val comp = ccLabels(s, dir)
       .select(col("node").as("doc_id"), col("label").as("component"))
     val canonW = Window.partitionBy(col("ch"))
-    val flagged = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val flagged = t(s, dir, "documents").filter(inSample)
       .select(col("doc_id"), coalesce(col("source"), lit("")).as("source"),
         col("text"), TextOps.canonHash(col("text")).as("ch"),
         coalesce(TextOps.qualityKeepLocal(col("text")), lit(false)).as("q"))
@@ -1097,7 +1103,7 @@ object DedupOps {
       |      AS is_canonical,
       |    COALESCE(${TextOps.qualityKeepSql}, FALSE) AS q,
       |    dd.doc_id = c.component AS is_cc_kept
-      |  FROM (SELECT * FROM documents WHERE doc_id % 10 = 0) dd
+      |  FROM (SELECT * FROM documents WHERE doc_id % $sampleMod = 0) dd
       |  JOIN comp c ON dd.doc_id = c.doc_id)
       |SELECT source, COUNT(*) AS n_docs,
       |  CAST(SUM(CASE WHEN q THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
@@ -1126,7 +1132,7 @@ object DedupOps {
           .filter(k => k._1 == s && k._2 == dir && k != key)
           .foreach(ccBaseLabelCache.remove)
         val baseDocs = t(s, dir, "documents")
-          .filter(col("doc_id") % 10 === 0 && col("doc_id") % 50 =!= 0)
+          .filter(inSample && col("doc_id") % 50 =!= 0)
         val baseEdges = ccEdges(s, dir)
           .filter(col("a_id") % 50 =!= 0 && col("b_id") % 50 =!= 0)
         ccFixpointLoop(baseDocs.select(col("doc_id").as("node")), baseEdges)
@@ -1309,8 +1315,8 @@ object DedupOps {
     * candidate pairs only (cross-multiplied milli, no division). */
   private def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val all = t(s, dir, "documents")
-    val inc = all.filter(col("doc_id") % 10 === 0)
-    val corpus = all.filter(col("doc_id") % 10 =!= 0)
+    val inc = all.filter(inSample)
+    val corpus = all.filter(!inSample)
     // exact tier: corpus collapsed to (text hash → canonical id) — one row
     // per distinct text regardless of corpus duplication
     val corpusHash = corpus.groupBy(md5(col("text")).as("h"))
@@ -1327,8 +1333,8 @@ object DedupOps {
     // queries had already run); banding is a 4-md5 projection over the
     // in-memory cache, cheap enough to derive per side.
     val bandsAll = bandsOfSigs(sharedMinhashSigs(s, dir))
-    val cand = bandsAll.filter(col("doc_id") % 10 === 0).as("x")
-      .join(bandsAll.filter(col("doc_id") % 10 =!= 0).as("y"),
+    val cand = bandsAll.filter(inSample).as("x")
+      .join(bandsAll.filter(!inSample).as("y"),
         col("x.band") === col("y.band") &&
           col("x.band_sig") === col("y.band_sig"))
       .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("cand_id"))
@@ -1365,8 +1371,8 @@ object DedupOps {
     s"""WITH $minhashSignaturesSql,
        |bands AS (
        |  $bandDefs),
-       |inc AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-       |corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
+       |inc AS (SELECT doc_id, text FROM documents WHERE doc_id % $sampleMod = 0),
+       |corp AS (SELECT doc_id, text FROM documents WHERE doc_id % $sampleMod <> 0),
        |ch AS (SELECT md5(text) AS h, MIN(doc_id) AS exact_of FROM corp GROUP BY 1),
        |ex AS (SELECT inc.doc_id, ch.exact_of
        |       FROM inc LEFT JOIN ch ON md5(inc.text) = ch.h),
@@ -1374,7 +1380,7 @@ object DedupOps {
        |  SELECT DISTINCT x.doc_id, y.doc_id AS cand_id
        |  FROM bands x JOIN bands y
        |    ON x.band = y.band AND x.band_sig = y.band_sig
-       |  WHERE x.doc_id % 10 = 0 AND y.doc_id % 10 <> 0),
+       |  WHERE x.doc_id % $sampleMod = 0 AND y.doc_id % $sampleMod <> 0),
        |uw AS (SELECT DISTINCT doc_id, w
        |       FROM documents, UNNEST(list_filter(string_split(text, ' '), x -> x <> '')) t(w)),
        |sz AS (SELECT doc_id, COUNT(*) AS n FROM uw GROUP BY 1),
@@ -1644,7 +1650,7 @@ object DedupOps {
     * [[minhashBandSweep]]; the heavy word relation underneath is
     * session-cached. */
   private def recallExactPairs(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val docs = t(s, dir, "documents").filter(inSample)
     // exact side — CC-verify universe: distinct non-empty words. The
     // trailing distinct() matches the oracle's corpus-level DISTINCT when
     // a dirty corpus carries duplicate doc_ids (per-row array_distinct
@@ -1722,7 +1728,7 @@ object DedupOps {
         .map(seed => f"'$seed%02d:' || m$seed").mkString(" || '|' || ")
       s"SELECT doc_id, $b AS band, md5($parts) AS band_sig FROM minh"
     }.mkString("\n  UNION ALL ")
-    s"""d AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+    s"""d AS (SELECT doc_id, text FROM documents WHERE doc_id % $sampleMod = 0),
        |sw AS (SELECT DISTINCT doc_id, s AS w
        |       FROM d, UNNEST(string_split(text,' ')) t(s) WHERE s <> ''),
        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sw GROUP BY 1),
@@ -1859,7 +1865,7 @@ object DedupOps {
     * array_intersect on the capped candidates only — never all-pairs.
     * Audit output is ≤ 11 rows at any corpus size. */
   private def minhashEstimateAudit(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
+    val docs = t(s, dir, "documents").filter(inSample)
     // the sampled signature cache (per-doc invariance,
     // [[sharedMinhashSigsSampled]]): row-equal to filtering the full
     // relation, without charging a full-corpus 16-seed aggregate to the
@@ -2483,7 +2489,7 @@ object DedupOps {
   private def dblIncCorpusMaps(s: SparkSession, dir: String)
       : Seq[DataFrame] = {
     val toks = Util.cachedRelation(s, dir, "dupDblIncToks", "")(
-      dblDocs(s, dir).filter(col("doc_id") % 10 =!= 0)
+      dblDocs(s, dir).filter(!inSample)
         .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "tok")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
           col("tok"), (col("doc_id") * 1048576L + col("pos")).as("gid")))
@@ -2548,7 +2554,7 @@ object DedupOps {
     * batch tier carried over. */
   private def dupSpanIncremental(s: SparkSession, dir: String): DataFrame = {
     val maps = dblIncCorpusMaps(s, dir)
-    val incD = dblDocs(s, dir).filter(col("doc_id") % 10 === 0)
+    val incD = dblDocs(s, dir).filter(inSample)
     val incToks = incD
       .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "tok")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok"))
@@ -2613,8 +2619,8 @@ object DedupOps {
     s"""WITH docs_ AS (
        |  SELECT doc_id, string_split(text, ' ') AS w
        |  FROM documents WHERE doc_id IS NOT NULL AND doc_id >= 0),
-       |incd AS (SELECT doc_id, w FROM docs_ WHERE doc_id % 10 = 0),
-       |corpd AS (SELECT doc_id, w FROM docs_ WHERE doc_id % 10 <> 0),
+       |incd AS (SELECT doc_id, w FROM docs_ WHERE doc_id % $sampleMod = 0),
+       |corpd AS (SELECT doc_id, w FROM docs_ WHERE doc_id % $sampleMod <> 0),
        |wc AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS pos, w[i+1 : i+$w] AS win
        |  FROM corpd, UNNEST(range(len(w))) u(i)

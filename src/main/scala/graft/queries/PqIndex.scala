@@ -34,7 +34,6 @@ object PqIndex {
     * session-cached encode relation — saving after querying costs only
     * the writes. */
   def save(s: SparkSession, dir: String, out: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val e = SimilarityOps.quantizedBase(s, dir)
     PqOps.subvectors(e.filter(col("vec_id") < PqOps.pqK))
       .select(col("m"), col("vec_id").as("code"),
@@ -54,7 +53,6 @@ object PqIndex {
     * pipeline (PqIndexSpec pins this, including the self-match case). */
   def serveAdcTopk(s: SparkSession, indexDir: String, queries: DataFrame,
       k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val cb = s.read.parquet(s"$indexDir/codebook.parquet")
     val codes = s.read.parquet(s"$indexDir/codes.parquet")
@@ -105,7 +103,6 @@ object PqIndex {
     * save/serve is what a deployment whose `pq_residual_gain` audit
     * came back positive persists instead of the raw artifacts. */
   def saveIvfAdcResidual(s: SparkSession, dir: String, out: String): Unit = {
-    graft.functions.GraftFunctions.register(s)
     SimilarityOps.ivfServeCents(s, dir)
       .write.mode("overwrite").parquet(s"$out/centroids.parquet")
     SimilarityOps.ivfServeAssigned(s, dir).select(col("vec_id"), col("cent_id"))
@@ -128,7 +125,6 @@ object PqIndex {
   def serveIvfAdcResidualTopk(s: SparkSession, indexDir: String,
       queries: DataFrame, k: Int = 5,
       nprobe: Int = SimilarityOps.ivfProbes): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val cents = s.read.parquet(s"$indexDir/centroids.parquet")
     val assigned = s.read.parquet(s"$indexDir/assigned.parquet")
@@ -179,7 +175,6 @@ object PqIndex {
     * artifacts only. */
   def serveIvfAdcTopk(s: SparkSession, indexDir: String, queries: DataFrame,
       k: Int = 5, nprobe: Int = SimilarityOps.ivfProbes): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val cents = s.read.parquet(s"$indexDir/centroids.parquet")
     val assigned = s.read.parquet(s"$indexDir/assigned.parquet")

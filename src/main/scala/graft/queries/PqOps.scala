@@ -95,7 +95,6 @@ object PqOps {
     * quantizedBase discipline. `private[graft]`: the streaming twin's
     * parity spec reads this relation directly. */
   private[graft] def pqEncoded(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     Util.cachedRelation(s, dir, "pqEncoded", s"m=$pqM,k=$pqK") {
       val e = SimilarityOps.quantizedBase(s, dir)
@@ -202,7 +201,6 @@ object PqOps {
   }
 
   private def pqAdcTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val tab = adcTable(s, dir)
     val cand = pqEncoded(s, dir)
@@ -251,7 +249,6 @@ object PqOps {
     * over the shared quantized base; reconciliation is a 25-row join
     * regardless of corpus size. */
   private def pqRecallAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = SimilarityOps.quantizedBase(s, dir)
     val qs = e.filter(col("vec_id") < 5)
@@ -312,7 +309,6 @@ object PqOps {
     * serving session this query costs one candidate join + one 4-row-deep
     * lookup aggregate on top of already-materialized state. */
   private def annIvfadcTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val cand = SimilarityOps.ivfServeProbes(s, dir, SimilarityOps.ivfProbes)
       .select(col("query_id"), col("cent_id"))
@@ -414,7 +410,6 @@ object PqOps {
     * IVFADC stores (Jégou §V.B). Session-cached: the gain audit and the
     * residual serve ride ONE encode pass (the pqEncoded discipline). */
   private[graft] def residualEncoded(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     Util.cachedRelation(s, dir, "pqResidualEncoded", s"m=$pqM,k=$pqK") {
       val rScored = subvectors(residualVecs(s, dir))
@@ -432,7 +427,6 @@ object PqOps {
   }
 
   private def pqResidualGain(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val plain = pqEncoded(s, dir).groupBy(col("m"))
       .agg(sum(col("dist")).as("distortion_plain"))
     val resid = residualEncoded(s, dir)
@@ -524,7 +518,6 @@ object PqOps {
     * representations, every small side broadcast, exact int64
     * everywhere. */
   private def annIvfadcResidualTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val pr = SimilarityOps.ivfServeProbes(s, dir, SimilarityOps.ivfProbes)
     // query residual per probed list: qq − that list's centroid
@@ -617,7 +610,6 @@ object PqOps {
   val rerankCandidates = 20
 
   private def annRerankAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = SimilarityOps.quantizedBase(s, dir)
     val qs = e.filter(col("vec_id") < 5)
@@ -741,7 +733,6 @@ object PqOps {
     * reassignments each) — the evidence that shipping untrained
     * stand-in codebooks leaves real quality on the table. */
   private def pqKmeansStep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = SimilarityOps.quantizedBase(s, dir)
     val enc = pqEncoded(s, dir)

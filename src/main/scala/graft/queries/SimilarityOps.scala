@@ -51,7 +51,6 @@ object SimilarityOps {
     * assignment twin. Zero-norm (NULL / empty / all-zero) vectors are
     * dropped, the quantizedBase contract. */
   def quantize(vecs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     vecs.select(col("vec_id"), qvec(col("embedding")).as("q"))
       .withColumn("nrm",
         graft.functions.GraftFunctions.quantized_dot(col("q"), col("q")))
@@ -229,7 +228,6 @@ object SimilarityOps {
     // sessions (and their cached blocks) for the JVM lifetime
     baseCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
     baseCache.getOrElseUpdate((s, dir), {
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "embeddings")
         .select(col("vec_id"), qvec(col("embedding")).as("q"))
         .withColumn("nrm",
@@ -258,7 +256,6 @@ object SimilarityOps {
 
   private def knnBruteCosineUncached(s: SparkSession, dir: String)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = quantizedBase(s, dir)
     val queries = e.filter(col("vec_id") < 5)
@@ -310,7 +307,6 @@ object SimilarityOps {
     * Shares the window variant's oracle: two physical strategies, one
     * semantic contract. */
   private def knnTopkAgg(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = quantizedBase(s, dir)
     val queries = e.filter(col("vec_id") < 5)
@@ -482,7 +478,6 @@ object SimilarityOps {
   /** Returns (result, persisted bands intermediate) — the caller owns the
     * cache registration and eventual unpersist of both. */
   private def annLshCosineUncached(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val dims = 64
     val nBits = lshBitsFor(s, dir)
@@ -628,7 +623,6 @@ object SimilarityOps {
     * candidate lists), and at scale a deployment holds the assignment,
     * not re-derives it per search. */
   private[queries] def ivfServeAssigned(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     Util.cachedRelation(s, dir, "ivfServeAssigned", s"K=${ivfCentroids(s)}") {
       val e = quantizedBase(s, dir)
@@ -649,7 +643,6 @@ object SimilarityOps {
     * nprobe): the nprobe best centroids per query vector. */
   private[queries] def ivfServeProbes(s: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val queries = quantizedBase(s, dir).filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nrm").as("qn"))
@@ -671,7 +664,6 @@ object SimilarityOps {
     * nprobe, never all-pairs. All assignment and ranking on exact int64
     * dots with id tiebreaks. */
   private def annIvfCosine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val assigned = ivfServeAssigned(s, dir)
     val probes = ivfServeProbes(s, dir, ivfProbes)
@@ -757,7 +749,6 @@ object SimilarityOps {
     * scored rows), one 8-key aggregate, one scalar cross join. Exact
     * int64 dots, id tiebreaks, integer milli everywhere. */
   private def ivfListDrift(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = quantizedBase(s, dir)
     val cents = e.filter(col("vec_id") < 10 && col("vec_id") % 5 =!= 0)
@@ -826,7 +817,6 @@ object SimilarityOps {
     * bounded, never all-pairs; everything reuses the session-cached
     * quantizedBase. */
   private def ivfProbeSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val assigned = ivfServeAssigned(s, dir)
     val pr = ivfServeProbes(s, dir, 4)
@@ -923,7 +913,6 @@ object SimilarityOps {
     * size); beyond that a deployment swaps the mean to DECIMAL — the
     * oracle contract pins today's widths. */
   private def kmeansStep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = quantizedBase(s, dir)
     val cents = e.filter(col("vec_id") < 10 && col("vec_id") % 5 =!= 0)
@@ -1046,7 +1035,6 @@ object SimilarityOps {
     kmeansTrainCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
     val missing = arms.filterNot(a => kmeansTrainCache.contains((s, dir, a._1)))
     if (missing.nonEmpty) {
-      graft.functions.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       def release(df: DataFrame): Unit =
         df.queryExecution.analyzed.foreach {
@@ -1365,7 +1353,6 @@ object SimilarityOps {
     * graph, start state h0 with entry_id + zeroed moves). */
   private def graphServeParts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val e = quantizedBase(s, dir)
     // the graph is node·degree-sized and read once per hop per consumer —
     // session-cached, keyed by the LSH knobs like the pair relation
@@ -1686,7 +1673,6 @@ object SimilarityOps {
 
   /** Per-label corpus statistics in exact integers. */
   private def embeddingStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), qvec(col("embedding")).as("q"))
       .withColumn("nrm", dotQ(col("q"), col("q")))
@@ -1792,7 +1778,6 @@ object SimilarityOps {
     * quadratic; the keep flag is one anti-join back. No stage touches
     * more than O(corpus + pairs-within-caps) rows. */
   private def semanticDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), qvec(col("embedding")).as("q"))
@@ -1939,7 +1924,6 @@ object SimilarityOps {
     s.conf.getOption("graft.knn.probeMod").map(_.toInt).getOrElse(20)
 
   private def knnLabelConsistency(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val lab = t(s, dir, "embeddings").filter(col("label").isNotNull)
       .select(col("vec_id"), col("label"))
@@ -2026,7 +2010,6 @@ object SimilarityOps {
     * (bloom → exact); this tier runs on the survivors or on the
     * embedding ingest path beside `ivfAssignStream`. */
   private def decontaminateSemantic(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = quantizedBase(s, dir)
     val isBench = col("vec_id") % 5 === 0 && col("vec_id") < 25
@@ -2098,7 +2081,6 @@ object SimilarityOps {
     s.conf.getOption("graft.lsh.probeMod").map(_.toInt).getOrElse(1)
 
   private def lshMultiprobeAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val bands = lshBands(s, dir)
     val bandBits = lshBitsFor(s, dir) / 2
     val probeSrc = bands.filter(col("vec_id") % lshProbeMod(s) === 0)
@@ -2192,7 +2174,6 @@ object SimilarityOps {
     * brute broadcast-join family. At 100 TB the same audit runs on a SAMPLE
     * of queries — cost is queries × corpus, independent of this plan. */
   private def sq8RecallAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = quantizedBase(s, dir)
     val g = e.agg(max(array_max(transform(col("q"), x => abs(x)))).as("gmax"))
@@ -2265,7 +2246,6 @@ object SimilarityOps {
     * components are all zero) are filtered like the base's zero-norm rule —
     * cosine is undefined there, on both sides of the oracle. */
   private def matryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = quantizedBase(s, dir)
     val sliced = Seq(16, 32, 64).map { l =>
@@ -2800,7 +2780,6 @@ object SimilarityOps {
 
   private def annGraphLayeredAudit(s: SparkSession, dir: String)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = quantizedBase(s, dir)
     val gb = hnswGraph(s, dir)
     val g1 = hnswLayerOne(s, dir)
@@ -3034,7 +3013,6 @@ object SimilarityOps {
     * pair relation — linear in |V|, never all-pairs; the decile report
     * is a 10-group aggregate. */
   private def annGraphInsertAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = quantizedBase(s, dir)
     val cand = hnswCand(s, dir)
     val kept = hnswKept(s, dir)
@@ -3282,7 +3260,6 @@ object SimilarityOps {
 
   private def annGraphDeleteAudit(s: SparkSession, dir: String)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val p = hnswRepairParts(s, dir)
     val (adj, nodes, surv, lost, aff, rcand, rkept) =
       (p.adj, p.nodes, p.surv, p.lost, p.aff, p.rcand, p.rkept)
@@ -3516,7 +3493,6 @@ object SimilarityOps {
   private def annGraphMaintainAudit(s: SparkSession, dir: String)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val e = quantizedBase(s, dir)
     val lshKey = s"${lshBitsFor(s, dir)}_${maxLshBucket(s)}"
     val p = hnswRepairParts(s, dir)
@@ -3617,7 +3593,6 @@ object SimilarityOps {
     * (rank-unrolled NOT-EXISTS chain). */
   private def annInsertGate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val e = quantizedBase(s, dir)
     val bands = lshBands(s, dir)
     val cb = bands.filter(col("vec_id") % 10 =!= 0)
@@ -3907,7 +3882,6 @@ object SimilarityOps {
     * identical session-cached center relations). */
   private def kppChain(s: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val e = quantizedBase(s, dir)
     def u32(seed: String) =
       conv(substring(md5(concat(lit(seed), col("vec_id").cast("string"))),

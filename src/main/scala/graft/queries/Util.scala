@@ -149,10 +149,10 @@ object Util {
     * built against, with identical wall-clock values to DuckDB's read
     * of the same file. */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // every query path passes here, so the engine's native functions AND
-    // the size∘array_intersect fusion rule are live in every session that
-    // runs a query — deterministically, not only after a similarity query
-    // happened to register them first (idempotent, a map put + Seq scan)
+    // every query path passes here, so the engine's functions, rewrite
+    // rules and as-of strategy are live in every session that runs a
+    // query, also one not built by graft.Session.local (after the first
+    // call per session this is one set lookup)
     graft.functions.GraftFunctions.register(s)
     if (name == "events") {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

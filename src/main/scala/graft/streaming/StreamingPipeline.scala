@@ -397,10 +397,6 @@ object StreamingPipeline {
     * watermark, no state store, append-safe. */
   def pruneStream(docs: DataFrame, canonIdx: DataFrame): DataFrame = {
     import graft.queries.TextOps
-    // a stream-only session never passes Util.t, so make the canon_norm
-    // fusion (and the rest of the engine registry) live here too —
-    // idempotent, and the canon hash below is this stream's hot expression
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("ch", TextOps.canonHash(col("text")))
       .join(canonIdx, Seq("ch"), "left")
@@ -443,7 +439,6 @@ object StreamingPipeline {
     * emitted stream is the live list-size monitor that feeds the
     * ivf_list_drift retrain decision. */
   def ivfAssignStream(vecs: DataFrame, quantizer: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val q = graft.queries.SimilarityOps.quantize(vecs)
     val accT = "struct<cent_id:bigint,ccos:double>"
     q.crossJoin(broadcast(quantizer)) // static side is ONE row
@@ -492,7 +487,6 @@ object StreamingPipeline {
     * batch rule. */
   def annServeStream(vecs: DataFrame, idx: DataFrame, entry: DataFrame)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val q = graft.queries.SimilarityOps.quantize(vecs)
     def cosOf(qq: Column, qn: Column, nq: Column, nn: Column): Column =
       graft.functions.GraftFunctions.quantized_dot(qq, nq).cast("double") /
@@ -570,7 +564,6 @@ object StreamingPipeline {
     * corpus vector replayed as an arrival. */
   def annInsertStream(vecs: DataFrame, planes: DataFrame,
       idx: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val q = graft.queries.SimilarityOps.quantize(vecs)
     val efC = graft.queries.SimilarityOps.insertEfC
     val mT = "array<struct<vec_id:bigint,q:array<bigint>,nrm:bigint>>"
@@ -784,7 +777,6 @@ object StreamingPipeline {
     * (the shared quantize contract); an empty bench set gates nothing.
     * One row in, one row out, no state, no shuffle. */
   def semanticGateStream(vecs: DataFrame, benchRow: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val q = graft.queries.SimilarityOps.quantize(vecs)
     val accT = "struct<bench_id:bigint,cos:double>"
     q.crossJoin(broadcast(benchRow)) // static side is ONE row
@@ -820,7 +812,6 @@ object StreamingPipeline {
     * codebook emits nothing rather than NULL codes. One row in, pqM rows
     * out, no state, no shuffle. */
   def pqEncodeStream(vecs: DataFrame, codebookRow: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     import graft.queries.PqOps.{pqM, pqSubDim}
     val q = graft.queries.SimilarityOps.quantize(vecs)
     val accT = "struct<code:bigint,dist:bigint>"
@@ -868,7 +859,6 @@ object StreamingPipeline {
     * the OOV signal feeding the retrain decision, the ivf_list_drift
     * cadence on the text side. */
   def unigramSegmentStream(docs: DataFrame, vocabRow: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       // the shared universe filter includes the trainer's word-length

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Storage-memory audit of the session-cache family (verdict task: the
@@ -32,15 +30,7 @@ object CacheAudit {
     val dir = args.headOption.getOrElse(
       throw new IllegalArgumentException("usage: CacheAudit <dataDir> [query ...]"))
     val names = if (args.length > 1) args.drop(1).toSeq else defaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     def storage(): (Long, Long, Seq[String]) = {
       val infos = spark.sparkContext.getRDDStorageInfo

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, date_format}
 
 import graft.etl._
@@ -22,14 +21,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     if (args.contains("--stream")) { streamMain(args.filterNot(_ == "--stream")); return }
     val work = Paths.get(args.headOption.getOrElse("/tmp/graft-demo"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     val landing = work.resolve("novos")
     val report = SftpStager.stage(new SftpStager.LocalStore(work), "remote", landing)
@@ -94,14 +86,7 @@ object PipelineDemo {
 
   private def streamMain(args: Array[String]): Unit = {
     val work = Paths.get(args.headOption.getOrElse("/tmp/graft-demo-stream"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     val dw = work.resolve("dw").toString
     // stage remote/ → landing/ like batch mode does, so the two CLIs take
     // the same input layout; an absent remote/ just means an empty landing

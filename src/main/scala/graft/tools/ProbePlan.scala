@@ -1,13 +1,14 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
-/** Bench-honesty probe: for each query, compare the physical plan Bench's
+/** Bench-honesty probe: for each query, compare the physical plan a
   * `.count()` action gets (after Catalyst join/column elimination) with
   * the plan full-row evaluation gets. A query whose count-plan loses ALL
   * its joins while the full plan has some is under-measured by a
   * count-based bench (Catalyst can delete left joins against
   * grouped-by-key relations when no column is consumed). */
 object ProbePlan {
-  private def joins(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+  /** Join operators in `plan`, subqueries included. */
+  def joins(plan: org.apache.spark.sql.execution.SparkPlan): Int =
     plan.collectWithSubqueries {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }.size
@@ -30,11 +31,8 @@ object ProbePlan {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus,
+      "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted

@@ -1,15 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Per-query cost attribution for the optimization loop (guide §1):
   * splits each query's wall time into CONSTRUCTION (the `fn(spark, dir)`
   * call — where iterative queries run their driver loops eagerly) and
-  * EXECUTION (the full-row hash action, Bench's rule), and counts Spark
-  * jobs / stages / tasks / shuffle bytes per phase via a listener.
-  * Purely diagnostic: shares nothing with Bench's timed path.
+  * EXECUTION ([[graft.Session.fullRow]], Bench's action), and counts Spark
+  * jobs / stages / tasks / shuffle bytes per phase via a listener, on
+  * Bench's session.
   *
   * Usage: sbt "runMain graft.tools.ProfileQ <sfDir> <query...>"
   * Each query line: name, build sec, exec sec, jobs, stages, tasks,
@@ -17,12 +16,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger(0)
@@ -57,12 +51,7 @@ object ProfileQ {
       val df = fn(spark, sfDir)
       val b1 = System.nanoTime()
       val (j1, s1, t1, r1, w1) = snap()
-      val cols = df.schema.fields
-        .filterNot(f => hasMap(f.dataType))
-        .map(f => s"`${f.name.replace("`", "``")}`")
-      if (cols.isEmpty) df.count()
-      else df.selectExpr(s"bit_xor(xxhash64(${cols.mkString(", ")})) AS h",
-        "count(*) AS n").collect()
+      graft.Session.fullRow(df)
       val e1 = System.nanoTime()
       val (j2, s2, t2, r2, w2) = snap()
       println(f"[profileq] $name%-32s build=${(b1 - b0) / 1e9}%7.2f s " +
@@ -73,15 +62,5 @@ object ProfileQ {
         f"shufR=${(r2 - r1) / 1e6}%8.1f MB shufW=${(w2 - w1) / 1e6}%8.1f MB)")
     }
     spark.stop()
-  }
-
-  private def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: MapType => true
-      case a: ArrayType => hasMap(a.elementType)
-      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
-      case _ => false
-    }
   }
 }

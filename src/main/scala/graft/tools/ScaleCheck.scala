@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Scale spot-check: time a named subset of SparkEntry queries against an
@@ -15,16 +13,13 @@ import graft.SparkEntry
   * containing '=' are set as session confs before running — how a scale
   * run pins deployment knobs like graft.knn.probeMod)
   *
-  * Timing is FULL-EVAL by default (the ForceQ rule): every output column
-  * is folded through `bit_xor(xxhash64(*))`, which no Catalyst rewrite
-  * can prune. A plain `count()` timer silently under-measures every
-  * "anchored audit" query — a left join against a unique-keyed aggregate
-  * (decontaminate_*, the drift/agreement audits) is provably
-  * cardinality-preserving, so under count() Catalyst ELIMINATES the whole
-  * audit subtree and the timer sees only the anchor scan (measured:
-  * decontaminate_minhash 1.2 s by count() vs 29.2 s real at the 100×
-  * corpus). Pass `graft.scalecheck.countOnly=true` to get the old timer
-  * for an A/B of exactly this effect. */
+  * Timing is [[graft.Session.fullRow]], Bench's action: a plain `count()`
+  * timer silently under-measures every "anchored audit" query — a left
+  * join against a unique-keyed aggregate (decontaminate_*, the
+  * drift/agreement audits) is provably cardinality-preserving, so under
+  * count() Catalyst ELIMINATES the whole audit subtree and the timer sees
+  * only the anchor scan (measured: decontaminate_minhash 1.2 s by count()
+  * vs 29.2 s real at the 100× corpus). */
 object ScaleCheck {
   private val defaultQueries = Seq("connected_components", "ann_lsh_cosine",
     "ann_ivf_cosine", "ngram_jaccard_pairs", "simhash_neardup_pairs")
@@ -46,19 +41,8 @@ object ScaleCheck {
       throw new IllegalArgumentException("usage: ScaleCheck <dataDir> [query ...]"))
     val (confs, queryArgs) = args.drop(1).toSeq.partition(_.contains("="))
     val names = (if (queryArgs.nonEmpty) queryArgs else defaultQueries).sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    confs.foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    }
+    val spark = graft.Session.local(graft.Session.cpus,
+      confs.map { kv => val Array(k, v) = kv.split("=", 2); k -> v }: _*)
 
     // uncounted warm-up on the SMALLEST driver corpus so JIT/codegen cost
     // doesn't land on the first measured query; never touches `dir`
@@ -69,23 +53,11 @@ object ScaleCheck {
       System.err.println(s"[scale-check] warm-up skipped: ${e.getMessage}")
     }
 
-    val countOnly =
-      confs.exists(_.startsWith("graft.scalecheck.countOnly=true"))
     val results = names.map { name =>
       val t0 = System.nanoTime()
       val n =
-        try {
-          val df = SparkEntry.queries(name)(spark, dir)
-          if (countOnly) Right(df.count())
-          else {
-            // ForceQ rule: hash every column so nothing can be pruned;
-            // count comes from the same single aggregate pass
-            val cols = df.columns.map(c => s"`$c`").mkString(", ")
-            val r = df.selectExpr(s"bit_xor(xxhash64($cols)) AS h",
-              "count(*) AS n").collect()(0)
-            Right(r.getLong(1))
-          }
-        } catch { case e: Throwable =>
+        try Right(graft.Session.fullRow(SparkEntry.queries(name)(spark, dir)))
+        catch { case e: Throwable =>
           System.err.println(s"[scale-check] $name FAILED: ${e.getMessage}")
           Left(e)
         }

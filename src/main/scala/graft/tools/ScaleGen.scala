@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic N× synthetic corpus generator for scale spot-checks.
   *
   * /root/testdata tops out at sf0.1 (5 000 documents / 2 000 embeddings) and
@@ -109,13 +107,7 @@ object ScaleGen {
     val mult = posArgs.lift(1).map(_.toInt).getOrElse(10)
     val nDocs = 5000L * mult
     val nVecs = 2000L * mult
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-scale-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     import spark.implicits._
 
     spark.range(nDocs).map { id =>

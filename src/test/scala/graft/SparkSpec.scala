@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,16 +10,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sqlc = spark.sqlContext
+  def tempDir(prefix: String): Path = SparkSpec.tempDir(prefix)
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+  /** One temp root per test JVM, deleted with everything under it when
+    * the JVM exits, so a full run leaves nothing in java.io.tmpdir. */
+  private lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft-tests")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh directory under the per-JVM temp root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tempRoot, prefix)
+
+  lazy val session: SparkSession = Session.local(4,
+    "spark.sql.warehouse.dir" -> tempDir("graft-warehouse").toString)
 }

@@ -20,7 +20,7 @@ class BucketedMergeSpec extends SparkSpec {
     // a realistic fatSchema-shaped DW: the flagship entry result,
     // materialized to parquet so both merge inputs are plain scans (the
     // claim under test is about the MERGE plan, not entry's pipeline)
-    val tmp = java.nio.file.Files.createTempDirectory("bucketmerge").toString
+    val tmp = tempDir("bucketmerge").toString
     graft.SparkEntry.entry(spark).write.parquet(s"$tmp/dw")
     val dw = spark.read.parquet(s"$tmp/dw")
     spark.sql("DROP TABLE IF EXISTS dw_bucketed")

@@ -12,7 +12,7 @@ class CompactorSpec extends SparkSpec {
   import spark.implicits._
 
   test("compact: many tiny appends → one healthy file, rows identical, idempotent") {
-    val dir = Files.createTempDirectory("compact").toString + "/t"
+    val dir = tempDir("compact").toString + "/t"
     // 12 separate appends = ≥12 small files (the loadStage shape)
     (0 until 12).foreach { i =>
       Seq((i.toLong, s"batch_$i")).toDF("id", "tag")
@@ -34,7 +34,7 @@ class CompactorSpec extends SparkSpec {
   }
 
   test("compactStaging runs under the run lock: busy → skipped no-op") {
-    val root = Files.createTempDirectory("compactlock")
+    val root = tempDir("compactlock")
     val staging = root.resolve("staging").toString
     (0 until 3).foreach { i =>
       Seq((i.toLong, "x")).toDF("id", "v")
@@ -55,7 +55,7 @@ class CompactorSpec extends SparkSpec {
 
   test("ZOrderWriter.compact: fewer files, manifest regenerated, pruning intact") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("zcompact").toString + "/z"
+    val out = tempDir("zcompact").toString + "/z"
     val d1 = expr("CAST(((o_custkey % 256) + 256) % 256 AS INT)")
     val d2 = expr("CAST(floor(((dayofyear(o_orderdate) - 1) * 256) / 366.0) AS INT)")
     val orders = spark.read.parquet(s"$dir/orders.parquet")

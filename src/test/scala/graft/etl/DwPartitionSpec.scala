@@ -26,7 +26,7 @@ class DwPartitionSpec extends SparkSpec {
       (header + "\n" + rows.mkString("\n") + "\n").getBytes("UTF-8"))
 
   test("upsertDw writes month partitions; month read prunes; readDw keeps fatSchema") {
-    val root = Files.createTempDirectory("dwpart")
+    val root = tempDir("dwpart")
     val novos = Files.createDirectories(root.resolve("novos"))
     val pipeline = new Pipeline(spark,
       root.resolve("staging").toString, root.resolve("dw").toString,
@@ -71,7 +71,7 @@ class DwPartitionSpec extends SparkSpec {
   }
 
   test("readDwMonth on a legacy unpartitioned DW falls back to data_nfe (not empty)") {
-    val root = Files.createTempDirectory("dwlegacy")
+    val root = tempDir("dwlegacy")
     val novos = Files.createDirectories(root.resolve("novos"))
     val dwDir = root.resolve("dw").toString
     val pipeline = new Pipeline(spark,
@@ -85,7 +85,7 @@ class DwPartitionSpec extends SparkSpec {
     // rewrite the DW as a flat (pre-partitioning) layout: same rows, no
     // nfe_month= directories
     val rows = pipeline.readDw()
-    val flat = Files.createTempDirectory("dwflat").toString
+    val flat = tempDir("dwflat").toString
     rows.write.mode("overwrite").parquet(flat)
     val legacy = new Pipeline(spark,
       root.resolve("staging2").toString, flat, root.resolve("hist2").toString)

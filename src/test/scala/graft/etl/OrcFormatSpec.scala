@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -13,7 +11,7 @@ import org.apache.spark.sql.functions._
 class OrcFormatSpec extends SparkSpec {
 
   test("documents round-trip parquet -> orc -> frame, value-identical") {
-    val dir = Files.createTempDirectory("orc")
+    val dir = tempDir("orc")
     val src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     src.write.orc(dir.resolve("documents.orc").toString)
     val back = spark.read.orc(dir.resolve("documents.orc").toString)
@@ -24,7 +22,7 @@ class OrcFormatSpec extends SparkSpec {
   }
 
   test("a query over the ORC copy matches the parquet original") {
-    val dir = Files.createTempDirectory("orcq")
+    val dir = tempDir("orcq")
     val pq = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     pq.write.orc(dir.resolve("lineitem.orc").toString)
     def agg(df: org.apache.spark.sql.DataFrame) =

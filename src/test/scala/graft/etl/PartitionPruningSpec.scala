@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -18,7 +16,7 @@ class PartitionPruningSpec extends SparkSpec {
     df.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }.head
 
   test("partitionBy write + equality filter prunes to one partition; data filter pushes down") {
-    val root = Files.createTempDirectory("prune").resolve("events").toString
+    val root = tempDir("prune").resolve("events").toString
     graft.queries.Util.t(spark, "/root/testdata/sf0.001", "events")
       .write.partitionBy("event_type").parquet(root)
     val nTypes = spark.read.parquet(root).select("event_type").distinct().count()

@@ -18,7 +18,7 @@ class PipelineSpec extends SparkSpec {
     Files.write(dir.resolve(name), (header + "\n" + rows.mkString("\n") + "\n").getBytes("UTF-8"))
 
   test("full pipeline: load → upsert (dedup + merge) → archive") {
-    val root = Files.createTempDirectory("pipe")
+    val root = tempDir("pipe")
     val novos = Files.createDirectories(root.resolve("novos"))
     val lidos = root.resolve("lidos"); val erros = root.resolve("erros")
     val pipeline = new Pipeline(spark,
@@ -83,7 +83,7 @@ class PipelineSpec extends SparkSpec {
 
   test("catalog: register + write-then-refresh keeps spark.table in sync " +
       "with the path-addressed pipeline") {
-    val root = Files.createTempDirectory("pipecat")
+    val root = tempDir("pipecat")
     val novos = Files.createDirectories(root.resolve("novos"))
     val lidos = root.resolve("lidos"); val erros = root.resolve("erros")
     val stagingP = root.resolve("staging").toString
@@ -138,7 +138,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("archive dedupOnReplay: crash between append and truncate does not double-archive") {
-    val root = Files.createTempDirectory("archive-replay")
+    val root = tempDir("archive-replay")
     val stagingPath = root.resolve("staging").toString
     val histPath = root.resolve("hist").toString
     val rows = Seq(("10", k1), ("11", k2)).map { case (id, key) =>
@@ -177,7 +177,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("run lock: concurrent archive/loadStage no-op cleanly while held, succeed after release") {
-    val root = Files.createTempDirectory("runlock")
+    val root = tempDir("runlock")
     val stagingPath = root.resolve("staging").toString
     val pipeline = new Pipeline(spark, stagingPath,
       root.resolve("dw").toString, root.resolve("hist").toString,
@@ -213,7 +213,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("run lock: a SECOND PROCESS holding the lock file blocks archive (true inter-process semantics)") {
-    val root = Files.createTempDirectory("runlock-xproc")
+    val root = tempDir("runlock-xproc")
     val stagingPath = root.resolve("staging").toString
     val pipeline = new Pipeline(spark, stagingPath,
       root.resolve("dw").toString, root.resolve("hist").toString,
@@ -285,7 +285,7 @@ class PipelineSpec extends SparkSpec {
       |""".stripMargin
 
   test("SftpBatchStore: list/size/get and verified staging through a scripted sftp transport") {
-    val root = Files.createTempDirectory("sftpwire")
+    val root = tempDir("sftpwire")
     val remote = Files.createDirectories(root.resolve("remote"))
     val landing = Files.createDirectories(root.resolve("landing"))
     Files.write(remote.resolve("A.CSV"), "alpha".getBytes)
@@ -320,7 +320,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("stager: size-verified download, skip existing, retry then fail") {
-    val root = Files.createTempDirectory("sftp")
+    val root = tempDir("sftp")
     val remote = Files.createDirectories(root.resolve("remote"))
     val landing = Files.createDirectories(root.resolve("landing"))
     Files.write(remote.resolve("A.CSV"), "aaa".getBytes)

@@ -2,7 +2,6 @@ package graft.etl
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions.col
-import java.nio.file.Files
 
 /** Regression guards for the review findings: the never-fail-a-batch
   * contract under Spark 4 default ANSI mode, the two insert-only merge
@@ -124,7 +123,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("upsert and archive are no-ops before anything was staged") {
-    val root = Files.createTempDirectory("bootstrap")
+    val root = tempDir("bootstrap")
     val pipeline = new Pipeline(spark,
       root.resolve("staging").toString, root.resolve("dw").toString,
       root.resolve("hist").toString)

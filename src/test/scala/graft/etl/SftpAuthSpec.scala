@@ -43,7 +43,7 @@ class SftpAuthSpec extends AnyFunSuite {
        |""".stripMargin
 
   test("withPassword: password reaches the child via SSHPASS env only; transport works") {
-    val root = Files.createTempDirectory("sftppw")
+    val root = graft.SparkSpec.tempDir("sftppw")
     val remote = Files.createDirectories(root.resolve("remote"))
     Files.write(remote.resolve("A.CSV"), "alpha".getBytes)
     val script = root.resolve("fake_sshpass_sftp.sh")
@@ -58,7 +58,7 @@ class SftpAuthSpec extends AnyFunSuite {
   }
 
   test("withPassword: wrong password fails loudly (one prompt, no retry hang)") {
-    val root = Files.createTempDirectory("sftppwbad")
+    val root = graft.SparkSpec.tempDir("sftppwbad")
     Files.createDirectories(root.resolve("remote"))
     val script = root.resolve("fake_sshpass_sftp.sh")
     Files.write(script, passwordSftp("hunter2").getBytes("UTF-8"))
@@ -79,7 +79,7 @@ class SftpAuthSpec extends AnyFunSuite {
   }
 
   test("size: stat of a one-file directory is rejected, not verified against the child") {
-    val root = Files.createTempDirectory("sftpdir")
+    val root = graft.SparkSpec.tempDir("sftpdir")
     val remote = Files.createDirectories(root.resolve("remote"))
     Files.write(remote.resolve("only.csv"), "abcdef".getBytes)
     val script = root.resolve("fake_sftp.sh")
@@ -93,7 +93,7 @@ class SftpAuthSpec extends AnyFunSuite {
   }
 
   test("list: unparseable ls lines are counted loudly, valid entries survive") {
-    val root = Files.createTempDirectory("sftpdrift")
+    val root = graft.SparkSpec.tempDir("sftpdrift")
     val script = root.resolve("drift.sh")
     // one GNU "total" header (benign, never warned), one valid entry, one
     // drifted line matching no long-listing shape — the drift must be
@@ -119,7 +119,7 @@ class SftpAuthSpec extends AnyFunSuite {
   }
 
   test("size: unparseable ls output is loud, not '0 entries'") {
-    val root = Files.createTempDirectory("sftpgarbage")
+    val root = graft.SparkSpec.tempDir("sftpgarbage")
     val script = root.resolve("garbage.sh")
     Files.write(script,
       "#!/bin/sh\necho 'banner: welcome to corp sftp'\n".getBytes("UTF-8"))

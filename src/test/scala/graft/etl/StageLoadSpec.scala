@@ -9,7 +9,7 @@ import java.nio.charset.Charset
 class StageLoadSpec extends SparkSpec {
 
   private def tmpFile(name: String, content: String, charset: String = "UTF-8"): Path = {
-    val dir = Files.createTempDirectory("stageload")
+    val dir = tempDir("stageload")
     val p = dir.resolve(name)
     Files.write(p, content.getBytes(Charset.forName(charset)))
     p
@@ -109,7 +109,7 @@ class StageLoadSpec extends SparkSpec {
   }
 
   test("listarCsvNovos anti-joins against lidos ∪ erros, sorted (ref :107-113)") {
-    val root = Files.createTempDirectory("queue")
+    val root = tempDir("queue")
     val novos = Files.createDirectories(root.resolve("novos"))
     val lidos = Files.createDirectories(root.resolve("lidos"))
     val erros = Files.createDirectories(root.resolve("erros"))
@@ -123,7 +123,7 @@ class StageLoadSpec extends SparkSpec {
   }
 
   test("safeCopy suffixes __dup_<ts> on collision (ref :96-105)") {
-    val root = Files.createTempDirectory("dup")
+    val root = tempDir("dup")
     val src = root.resolve("f.csv"); Files.write(src, "x".getBytes)
     val dst = Files.createDirectories(root.resolve("out"))
     val first = StageLoad.safeCopy(src, dst)

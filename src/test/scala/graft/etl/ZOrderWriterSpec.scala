@@ -21,7 +21,7 @@ class ZOrderWriterSpec extends SparkSpec {
     df.select(input_file_name()).distinct().count()
 
   test("zorder write: 16 files, manifest complete, pruned reads correct and bounded") {
-    val out = java.nio.file.Files.createTempDirectory("zw").toString + "/z"
+    val out = tempDir("zw").toString + "/z"
     ZOrderWriter.write(orders, out, d1, d2, numFiles = 16)
 
     val man = ZOrderWriter.manifest(spark, out).collect()
@@ -49,7 +49,7 @@ class ZOrderWriterSpec extends SparkSpec {
   }
 
   test("zorder beats linear on the non-sort dimension; linear wins only its own") {
-    val root = java.nio.file.Files.createTempDirectory("zwcmp").toString
+    val root = tempDir("zwcmp").toString
     ZOrderWriter.write(orders, s"$root/z", d1, d2, 16, ZOrderWriter.ZOrder)
     ZOrderWriter.write(orders, s"$root/lin", d1, d2, 16, ZOrderWriter.Linear)
 
@@ -87,8 +87,7 @@ class ZOrderWriterSpec extends SparkSpec {
     for (seed <- Seq(7L, 8L)) {
       val rows = sample(Gen.zip(genDim, genDim), 400, seed * 1000)
         .zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
-      val out = java.nio.file.Files
-        .createTempDirectory(s"zwprop$seed").toString + "/z"
+      val out = tempDir(s"zwprop$seed").toString + "/z"
       ZOrderWriter.write(rows.toDF("id", "a", "b"), out,
         col("a"), col("b"), numFiles = 8)
       assert(spark.read.parquet(out).count() == 400, "no rows lost")
@@ -112,7 +111,7 @@ class ZOrderWriterSpec extends SparkSpec {
 
   test("NULL dims: rows are kept, never matched by a range probe, never lost") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("zwnull").toString + "/z"
+    val out = tempDir("zwnull").toString + "/z"
     val df = Seq(
       (1L, Some(10), Some(20)), (2L, None, Some(70)),
       (3L, Some(70), None), (4L, None, None), (5L, Some(70), Some(70)))

@@ -14,7 +14,7 @@ class AdaptiveCutoffSpec extends SparkSpec {
     (Seq.fill(nStop)("the") ++ Seq.fill(nFill)("zzz")).mkString(" ")
 
   test("adaptive_quality_cutoff: per-source cutoffs match a rank-statistic recount") {
-    val dir = java.nio.file.Files.createTempDirectory("adaptcut").toString
+    val dir = tempDir("adaptcut").toString
     import spark.implicits._
     // source A: 20 docs, stoppy and short; source B: 15 docs, sparse and
     // long — the same doc would pass one source's gate and fail the other's

@@ -14,7 +14,7 @@ class BpeMergeSpec extends SparkSpec {
         r.getAs[Long]("pair_count")))
 
   test("bpe_merge_rounds: weighted argmax per round, then exhaustion") {
-    val dir = java.nio.file.Files.createTempDirectory("bpe1").toString
+    val dir = tempDir("bpe1").toString
     import spark.implicits._
     // vocab: abab freq 3, ab freq 2, cd freq 5
     // r1: (a,b) = 2*3 + 1*2 = 8 beats (c,d) = 5 and (b,a) = 3 -> "ab"
@@ -34,7 +34,7 @@ class BpeMergeSpec extends SparkSpec {
   }
 
   test("bpe_compression: per-source ROI of the learned merges, hand-computed") {
-    val dir = java.nio.file.Files.createTempDirectory("bpec").toString
+    val dir = tempDir("bpec").toString
     import spark.implicits._
     // same corpus as the argmax test, split across two sources; after the
     // three merges every word is a single symbol:
@@ -57,7 +57,7 @@ class BpeMergeSpec extends SparkSpec {
   }
 
   test("bpe_merge_rounds: greedy left-to-right overlap (aaaa -> aa,aa -> aaaa)") {
-    val dir = java.nio.file.Files.createTempDirectory("bpe2").toString
+    val dir = tempDir("bpe2").toString
     import spark.implicits._
     (1L to 4L).map(i => (i, "aaaa", "en", "src0", 4L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

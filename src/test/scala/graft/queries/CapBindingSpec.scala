@@ -14,7 +14,7 @@ class CapBindingSpec extends SparkSpec {
 
   test("simhash bucket cap binds: oversized bucket dropped, metric fired") {
     assert(DedupOps.maxSimhashBucket(spark) == 1024)
-    val dir = java.nio.file.Files.createTempDirectory("capbind").toString
+    val dir = tempDir("capbind").toString
     import spark.implicits._
     // 1030 sampled docs (doc_id % 10 == 0) with identical text → every band
     // bucket holds 1030 > 1024 members → dropped; plus one small pair of
@@ -65,7 +65,7 @@ class CapBindingSpec extends SparkSpec {
     // cap BELOW a real cluster to prove the divergence is loud: dropped
     // buckets fire graft_drop_cc_bucket, and the capped cluster's docs fall
     // back to singleton components instead of silently wrong merges.
-    val dir = java.nio.file.Files.createTempDirectory("ccbind").toString
+    val dir = tempDir("ccbind").toString
     import spark.implicits._
     // 12 sampled clones (identical text → all 4 band buckets size 12 > 8 →
     // dropped) + one identical pair whose size-2 buckets survive the cap
@@ -110,7 +110,7 @@ class CapBindingSpec extends SparkSpec {
   }
 
   test("basket cap binds: mega-order dropped whole, metric fired, small baskets survive") {
-    val dir = java.nio.file.Files.createTempDirectory("capbasket").toString
+    val dir = tempDir("capbasket").toString
     import spark.implicits._
     // one 5-part mega-order (over the lowered cap of 3 → dropped WHOLE)
     // plus two {1, 2} baskets whose support-2 pair must survive
@@ -153,7 +153,7 @@ class CapBindingSpec extends SparkSpec {
   }
 
   test("semantic cluster cap binds: oversized cluster dropped whole, small cluster keeps verdicts") {
-    val dir = java.nio.file.Files.createTempDirectory("capsem").toString
+    val dir = tempDir("capsem").toString
     import spark.implicits._
     // two well-separated clusters: label 0 holds 3 near-identical vectors
     // (pairwise cos ≈ 1 → the dedup path must fire inside it), label 1

@@ -9,7 +9,7 @@ import graft.{SparkEntry, SparkSpec}
 class CcIncrementalSpec extends SparkSpec {
 
   test("cc_incremental: planted increment joins its base component; isolated increment keeps itself") {
-    val dir = java.nio.file.Files.createTempDirectory("ccinc").toString
+    val dir = tempDir("ccinc").toString
     import spark.implicits._
     Seq(
       // base slice (doc_id % 10 == 0, % 50 != 0): three singleton comps
@@ -39,7 +39,7 @@ class CcIncrementalSpec extends SparkSpec {
   }
 
   test("cc_incremental: empty increment degenerates to the base labels") {
-    val dir = java.nio.file.Files.createTempDirectory("ccincempty").toString
+    val dir = tempDir("ccincempty").toString
     import spark.implicits._
     // no doc_id % 50 == 0 docs at all: the contracted graph is empty and
     // every base label must pass through unchanged

@@ -12,7 +12,7 @@ class CorpusOpsSpec extends SparkSpec {
     Seq.fill(n)(w).mkString(" ")
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("corpusops").toString
+    val d = tempDir("corpusops").toString
     import spark.implicits._
     Seq(
       // source A: exact boundary then straddle
@@ -141,7 +141,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("vocab_growth_curve: saturating vs growing sources, decile cuts, running vocab") {
-    val d = java.nio.file.Files.createTempDirectory("vocabgrowth").toString
+    val d = tempDir("vocabgrowth").toString
     import spark.implicits._
     // source SAT: 20 docs all drawn from the same 3-word vocabulary —
     // every word is first seen in decile 0, the curve flatlines.
@@ -180,7 +180,7 @@ class CorpusOpsSpec extends SparkSpec {
       "B" -> ((2L, 11L, 2L, 1013L, 989L, 1L, 501L, 978L))))
 
     // a source of zero tokens (NULL text) reports zero contexts and NULL rates
-    val d2 = java.nio.file.Files.createTempDirectory("padnull").toString
+    val d2 = tempDir("padnull").toString
     import spark.implicits._
     Seq((1L, null: String, "en", "Z", 0L), (2L, "", "en", "Z", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -194,7 +194,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("corpus_balance_langs: integer-coin keep rule, dominant lang sampled down") {
-    val d = java.nio.file.Files.createTempDirectory("balance").toString
+    val d = tempDir("balance").toString
     import spark.implicits._
     // en dominates 40:10 — target is min/2 = 5 expected per lang, so the
     // en keep odds are 1/16 and de's are 1/2
@@ -225,7 +225,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("pack_length_sweep fixture: hand-computed grid; policy directions") {
-    val d = java.nio.file.Files.createTempDirectory("lensweep").toString
+    val d = tempDir("lensweep").toString
     import spark.implicits._
     Seq(3, 512, 700, 9000).zipWithIndex.map { case (k, i) =>
       (i.toLong, Seq.fill(k)("w").mkString(" "), "en", "s", 0L)
@@ -301,7 +301,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("temperature sampler fixture: heavy source down, light source up") {
-    val d = java.nio.file.Files.createTempDirectory("tsample").toString
+    val d = tempDir("tsample").toString
     import spark.implicits._
     // heavy: 90 docs x 4 tokens = 360 tokens; light: 10 x 4 = 40.
     // sqrt flattening: rt = 18 / 6 -> t = 750 / 250 vs p = 900 / 100,
@@ -324,7 +324,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("mix_upsample: per-source epoch factor repeats docs with epoch index") {
-    val d = java.nio.file.Files.createTempDirectory("upsample").toString
+    val d = tempDir("upsample").toString
     import spark.implicits._
     Seq((1L, "a", "en", "src2", 1L),   // 2 % 3 + 1 = 3 epochs
       (2L, "b", "en", "src3", 1L),     // 3 % 3 + 1 = 1 epoch
@@ -341,7 +341,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("line_dedup: corpus-wide first occurrence, in-doc repeats, full-dup doc") {
-    val d = java.nio.file.Files.createTempDirectory("linededup").toString
+    val d = tempDir("linededup").toString
     import spark.implicits._
     val oct = "a b c d e f g h" // exactly one 8-token chunk
     Seq(
@@ -362,7 +362,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("vocab_topk: count-desc/token tiebreak rank, cumulative milli share") {
-    val d = java.nio.file.Files.createTempDirectory("vocab").toString
+    val d = tempDir("vocab").toString
     import spark.implicits._
     Seq((0L, "a a b", "en", "s", 0L), (1L, "b c", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -376,7 +376,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("target_affinity_resample: hand-computed affinities and per-source keep ranks") {
-    val dir = java.nio.file.Files.createTempDirectory("affinity").toString
+    val dir = tempDir("affinity").toString
     import spark.implicits._
     // word stats with doc 4 present: aa cnt_r=3 cnt_t=1, bb cnt_r=2 cnt_t=1,
     // zz/yy cnt_r=1 cnt_t=0

@@ -8,7 +8,7 @@ import graft.{SparkEntry, SparkSpec}
 class CorpusYieldSpec extends SparkSpec {
 
   test("corpus_yield_report: per-source gate counts and final yield") {
-    val dir = java.nio.file.Files.createTempDirectory("cyr").toString
+    val dir = tempDir("cyr").toString
     import spark.implicits._
     Seq(
       // srcA: 10/20 near-dups (same word set), 40 exact dup of 10,

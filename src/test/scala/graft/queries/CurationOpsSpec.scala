@@ -158,7 +158,7 @@ class CurationOpsSpec extends SparkSpec {
   test("global_shuffle_shards ord_check pins the order, not just membership") {
     // two docs landing in one shard: swapping their hash order must flip
     // ord_check — recompute both permutations by hand and check they differ
-    val dir = java.nio.file.Files.createTempDirectory("shuf").toString
+    val dir = tempDir("shuf").toString
     import spark.implicits._
     val ids = (1L to 40L)
     ids.map(i => (i, s"w$i a b", "en", "src", 0L))
@@ -238,7 +238,7 @@ class CurationOpsSpec extends SparkSpec {
       (3L, "w3 a b", "en", "s", 0L), // 3 words -> quality fail
       (4L, passB, "en", "s", 0L), // second survivor
       (5L, null.asInstanceOf[String], "en", "s", 0L)) // no text
-    val dir = java.nio.file.Files.createTempDirectory("curated").toString
+    val dir = tempDir("curated").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val expected = manifestRecount(
@@ -248,7 +248,7 @@ class CurationOpsSpec extends SparkSpec {
     assert(manifestRows("global_shuffle_shards", dir).toSeq.map(_._2).sum == 5L)
 
     // an all-junk corpus exports an empty manifest
-    val dir2 = java.nio.file.Files.createTempDirectory("curated2").toString
+    val dir2 = tempDir("curated2").toString
     rows.filter(r => r._1 == 3L || r._1 == 5L)
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
@@ -287,7 +287,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("export_manifest_drift fixture: an increment-free corpus preserves order everywhere") {
-    val d = java.nio.file.Files.createTempDirectory("mdrift").toString
+    val d = tempDir("mdrift").toString
     import spark.implicits._
     val ids = (1L to 60L).filter(i => h32(i.toString) % 10 != 9)
     assert(ids.size >= 8)
@@ -352,7 +352,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("dsir fixture: pure-target doc kept, off-distribution doc dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("dsir").toString
+    val dir = tempDir("dsir").toString
     import spark.implicits._
     // 6 en docs share a tight bigram vocabulary; one junk doc repeats
     // bigrams that never occur in the en slice

@@ -69,7 +69,7 @@ class DecontaminateMinhashSpec extends SparkSpec {
     }.toMap
 
   test("planted fixture: near-dup of a bench doc flagged, rest clean") {
-    val d = java.nio.file.Files.createTempDirectory("deconmh").toString
+    val d = tempDir("deconmh").toString
     // 97 is the bench doc (97 % 97 == 0); 10 is a light edit of it (last
     // word changed: shares 17 of 18+1 distinct trigrams → J = 17/19 ≈ 894);
     // 11 shares a few words but no trigram run; 12 is sub-3-word; 13 NULL

@@ -7,7 +7,7 @@ import graft.{SparkEntry, SparkSpec}
 class DecontaminateSemanticSpec extends SparkSpec {
 
   test("decontaminate_semantic: bench exclusion, argmax tiebreak, τ verdict") {
-    val dir = java.nio.file.Files.createTempDirectory("semdecon").toString
+    val dir = tempDir("semdecon").toString
     import spark.implicits._
     def v(a: Float, b: Float, c: Float, d: Float) = Array(a, b, c, d)
     Seq(

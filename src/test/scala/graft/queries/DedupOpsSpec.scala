@@ -8,7 +8,7 @@ import graft.{SparkEntry, SparkSpec}
 class DedupOpsSpec extends SparkSpec {
 
   test("dedup_incremental: exact / near / new tiers against the corpus slice") {
-    val dir = java.nio.file.Files.createTempDirectory("incdedup").toString
+    val dir = tempDir("incdedup").toString
     import spark.implicits._
     Seq(
       // corpus (doc_id % 10 != 0)
@@ -32,7 +32,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("containment_pairs: a planted quote scores 1000 milli; sub-threshold overlap is absent") {
-    val dir = java.nio.file.Files.createTempDirectory("containment").toString
+    val dir = tempDir("containment").toString
     import spark.implicits._
     val a = (1 to 20).map(i => s"a$i").mkString(" ")  // 18 distinct trigrams
     val b = (5 to 12).map(i => s"a$i").mkString(" ")  // 6 trigrams, all ⊆ A
@@ -56,7 +56,7 @@ class DedupOpsSpec extends SparkSpec {
   test("containment_prefix_pairs: identical rows to the exact plan, planted and random") {
     import spark.implicits._
     // planted corpus: same fixture as the exact test — one qualifying pair
-    val dir = java.nio.file.Files.createTempDirectory("containpfx").toString
+    val dir = tempDir("containpfx").toString
     val a = (1 to 20).map(i => s"a$i").mkString(" ")
     val b = (5 to 12).map(i => s"a$i").mkString(" ")
     val d = ((1 to 4).map(i => s"a$i") ++ (1 to 10).map(i => s"d$i")).mkString(" ")
@@ -84,7 +84,7 @@ class DedupOpsSpec extends SparkSpec {
       val text = (0 until n).map(k => vocab((start + k) % vocab.length)).mkString(" ")
       (id, text, "en", "src0", text.length.toLong)
     }
-    val rdir = java.nio.file.Files.createTempDirectory("containpfxr").toString
+    val rdir = tempDir("containpfxr").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$rdir/documents.parquet")
     val exact = SparkEntry.queries("containment_pairs")(spark, rdir).collect()
@@ -107,7 +107,7 @@ class DedupOpsSpec extends SparkSpec {
       val text = (0 until n).map(k => vocab((start + k) % vocab.length)).mkString(" ")
       (id, text)
     }
-    val dir = java.nio.file.Files.createTempDirectory("jacpfx").toString
+    val dir = tempDir("jacpfx").toString
     docs.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -137,7 +137,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("cross_source_leakage: planted cross- and within-source near-dups classified") {
-    val dir = java.nio.file.Files.createTempDirectory("leakage").toString
+    val dir = tempDir("leakage").toString
     import spark.implicits._
     // universe is doc_id % 10 == 0; 10↔20 near-dup across sources (word-set
     // equal → all bands shared, J = 1), 30↔40 within one source, 50 alone,
@@ -161,7 +161,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("soft_dedup_weights: 1/cluster weights, longest-copy canonical, singletons keep themselves") {
-    val dir = java.nio.file.Files.createTempDirectory("softdedup").toString
+    val dir = tempDir("softdedup").toString
     import spark.implicits._
     // 10↔20↔30 one cluster (word-set equal → all bands shared); 30 carries
     // a repeated word so its token COUNT is highest while its word SET is
@@ -191,7 +191,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("dedup_tier_agreement: planted both-tier pair, conservation vs the public tier queries") {
-    val dir = java.nio.file.Files.createTempDirectory("tieragree").toString
+    val dir = tempDir("tieragree").toString
     import spark.implicits._
     // 10↔20 word-PERMUTED: identical word sets → every MinHash band shared
     // and J = 1 (edge), and identical distinct-word SimHash signatures →
@@ -227,7 +227,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("dup_cluster_stats: planted cluster sizes land in the right log2 buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("dupstats").toString
+    val dir = tempDir("dupstats").toString
     import spark.implicits._
     // one cluster of 4 (case/punct variants of one canon form, bucket 2),
     // one cluster of 2 (bucket 1), three singletons (bucket 0), one NULL
@@ -254,7 +254,7 @@ class DedupOpsSpec extends SparkSpec {
 
   test("dup_span_doubling: hand-computed fixture — classes = identical " +
     "windows, truncation at doc end, laws hold") {
-    val dir = java.nio.file.Files.createTempDirectory("dupdbl").toString
+    val dir = tempDir("dupdbl").toString
     import spark.implicits._
     // doc 1: "a b a b"  doc 2: "a b x"  doc 3 (null id): ignored
     Seq((Some(1L), "a b a b"), (Some(2L), "a b x"),
@@ -309,7 +309,7 @@ class DedupOpsSpec extends SparkSpec {
 
   test("dup_span_incremental: hand fixture — one matched window, novel " +
     "token blocks a 7/8 overlap, null text counts zero") {
-    val dir = java.nio.file.Files.createTempDirectory("dupspaninc").toString
+    val dir = tempDir("dupspaninc").toString
     import spark.implicits._
     Seq(
       // corpus (doc_id % 10 != 0): 10 tokens → 3 full 8-token windows
@@ -372,7 +372,7 @@ class DedupOpsSpec extends SparkSpec {
 
   test("substring_dedup_apply: hand-computed cut fixture — non-rep " +
     "occurrences cut, representative kept, doc split at cut points") {
-    val dir = java.nio.file.Files.createTempDirectory("dupapply").toString
+    val dir = tempDir("dupapply").toString
     import spark.implicits._
     val eight = (1 to 8).map(i => s"t$i").mkString(" ")
     // doc 1 holds the REPRESENTATIVE occurrence (min gid) of the

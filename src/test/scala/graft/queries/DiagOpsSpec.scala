@@ -10,7 +10,7 @@ import graft.{SparkEntry, SparkSpec}
 class DiagOpsSpec extends SparkSpec {
 
   private def writeEvents(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("diagops").toString
+    val dir = tempDir("diagops").toString
     import spark.implicits._
     rows.zipWithIndex.map { case ((uid, et, ts), i) =>
       (i.toLong, Timestamp.valueOf(ts).getTime * 1000000L, uid, et, 1.0, "{}")
@@ -20,7 +20,7 @@ class DiagOpsSpec extends SparkSpec {
   }
 
   private def writeOrders(prices: Seq[Double]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("diagops").toString
+    val dir = tempDir("diagops").toString
     import spark.implicits._
     prices.zipWithIndex.map { case (p, i) =>
       (i.toLong, i.toLong, "O", p, Timestamp.valueOf("2024-01-01 00:00:00"),
@@ -32,7 +32,7 @@ class DiagOpsSpec extends SparkSpec {
   }
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("diagops").toString
+    val dir = tempDir("diagops").toString
     import spark.implicits._
     rows.map { case (id, lang) =>
       (id, s"doc $id", Option(lang).orNull, "src", 6L)
@@ -85,7 +85,7 @@ class DiagOpsSpec extends SparkSpec {
     val once = SparkEntry.queries("event_debounce")(spark, dir).collect()
       .map(_.getAs[Long]("event_id")).toSeq
     // re-apply on the survivors: write them back and debounce again
-    val dir2 = java.nio.file.Files.createTempDirectory("diagops").toString
+    val dir2 = tempDir("diagops").toString
     val surv = SparkEntry.queries("event_debounce")(spark, dir)
     import org.apache.spark.sql.functions._
     surv.select(col("event_id"),

@@ -27,7 +27,7 @@ class DocPoisonSpec extends SparkSpec {
     "stratified_sample", "group_sample_k")
 
   test("every documents-table query survives a poison corpus under ANSI") {
-    val dir = java.nio.file.Files.createTempDirectory("docpoison").toString
+    val dir = tempDir("docpoison").toString
     import spark.implicits._
     Seq[(java.lang.Long, String, String, String, java.lang.Long)](
       (0L, "", "en", "src0", 0L),                  // empty text

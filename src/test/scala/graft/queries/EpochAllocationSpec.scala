@@ -16,7 +16,7 @@ class EpochAllocationSpec extends SparkSpec {
         r.getAs[Boolean]("capped")))
 
   test("hand-computed fixture: cap binds on the top source, rate boundary exact") {
-    val dir = java.nio.file.Files.createTempDirectory("epoch1").toString
+    val dir = tempDir("epoch1").toString
     import spark.implicits._
     // srcA: 2 passing docs (q=1000), srcB: 1 of 2 pass (q=500),
     // srcC: 0 of 2 (q=0); each source 10 tokens -> T = 60, w_tot = 15000.

@@ -22,7 +22,7 @@ class EventsPoisonSpec extends SparkSpec {
     "event_debounce", "skew_profile", "dau_wau", "error_zscore_hours")
 
   test("every events-table query survives a poison log under ANSI") {
-    val dir = java.nio.file.Files.createTempDirectory("eventspoison").toString
+    val dir = tempDir("eventspoison").toString
     import spark.implicits._
     def ns(s: String): java.lang.Long =
       java.sql.Timestamp.valueOf(s).getTime * 1000000L

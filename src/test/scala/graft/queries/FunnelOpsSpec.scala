@@ -10,7 +10,7 @@ class FunnelOpsSpec extends SparkSpec {
 
   // events.ts is int64 nanoseconds in the driver layout (see PrivacyOpsSpec)
   private def writeEvents(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("funnelops").toString
+    val dir = tempDir("funnelops").toString
     import spark.implicits._
     rows.zipWithIndex.map { case ((uid, et, ts), i) =>
       (i.toLong, Timestamp.valueOf(ts).getTime * 1000000L, uid, et, 1.0, "{}")

@@ -11,7 +11,7 @@ import graft.{SparkEntry, SparkSpec}
 class GraphOpsSpec extends SparkSpec {
 
   test("pagerank_links: 4-iteration integer-milli trace; duplicate pairs count once") {
-    val dir = java.nio.file.Files.createTempDirectory("graphops").toString
+    val dir = tempDir("graphops").toString
     import spark.implicits._
     Seq((1L, 1L), (1L, 1L), (1L, 2L), (2L, 1L)) // (partkey, suppkey), one dup
       .toDF("l_partkey", "l_suppkey")
@@ -33,7 +33,7 @@ class GraphOpsSpec extends SparkSpec {
     * (2,3), (1,4) — parts 1-2-3 close a triangle, part 4 hangs off 1,
     * part 5 never reaches support. */
   private def writeBaskets(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("baskets").toString
+    val dir = tempDir("baskets").toString
     import spark.implicits._
     Seq(
       (10L, 1L), (10L, 2L), (10L, 3L), (10L, 3L), // dup item row
@@ -208,7 +208,7 @@ class GraphOpsSpec extends SparkSpec {
     * this exercises exactly the extension (t ≥ 4, early stop, t90). */
   test("graph_effective_diameter ≡ plain-Scala propagation to convergence" +
     " on a diameter-4 path; t90 interpolation law") {
-    val dir = java.nio.file.Files.createTempDirectory("hanfdiam").toString
+    val dir = tempDir("hanfdiam").toString
     import spark.implicits._
     Seq((1L, 1L), (2L, 1L), (2L, 2L), (3L, 2L))
       .toDF("l_partkey", "l_suppkey")
@@ -294,7 +294,7 @@ class GraphOpsSpec extends SparkSpec {
     * and the HLL estimates of 1–5 element balls preserve the order). */
   test("graph_harmonic_centrality ≡ plain-Scala HyperBall replay; " +
     "center of the path ranks first") {
-    val dir = java.nio.file.Files.createTempDirectory("hanfhc").toString
+    val dir = tempDir("hanfhc").toString
     import spark.implicits._
     Seq((1L, 1L), (2L, 1L), (2L, 2L), (3L, 2L))
       .toDF("l_partkey", "l_suppkey")

@@ -35,7 +35,7 @@ class HybridRetrievalSpec extends SparkSpec {
 
   test("bm25_prf_topk: expansion recalls a doc sharing no original term") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("prf").toString
+    val d = tempDir("prf").toString
     // q0's terms {alphaterm, betaterm}; doc10 is the only pass-1 hit and
     // contributes expansion terms {gammaterm, deltaterm}; doc11 shares
     // ONLY expansion terms, doc12 shares nothing.

@@ -36,7 +36,7 @@ class InvariantSpec extends SparkSpec {
   } yield ws.mkString(" ")
 
   private def writeDocs(texts: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("invdocs").toString
+    val dir = tempDir("invdocs").toString
     texts.zipWithIndex.map { case (t, i) =>
       (i.toLong, t, "en", "s", t.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -77,7 +77,7 @@ class InvariantSpec extends SparkSpec {
   } yield (uid, et, minute)
 
   private def writeEvents(rows: Seq[(Long, String, Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("invevents").toString
+    val dir = tempDir("invevents").toString
     val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
     rows.zipWithIndex.map { case ((uid, et, min), i) =>
       (i.toLong, (t0 + min * 60000L) * 1000000L, uid, et, 1.0, "{}")

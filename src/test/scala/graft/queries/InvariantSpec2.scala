@@ -41,7 +41,7 @@ class InvariantSpec2 extends SparkSpec {
   } yield ps.distinct
 
   private def writeBaskets(baskets: Seq[Seq[Long]]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("invbaskets").toString
+    val dir = tempDir("invbaskets").toString
     baskets.zipWithIndex.flatMap { case (ps, oid) =>
       ps.map(p => (oid.toLong, p))
     }.toDF("l_orderkey", "l_partkey")
@@ -96,7 +96,7 @@ class InvariantSpec2 extends SparkSpec {
   }
 
   test("dedup_canonical: planted variants collapse; group sizes conserve the corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("canondocs").toString
+    val dir = tempDir("canondocs").toString
     Seq(
       (1L, "Hello, World!"), (2L, "hello world"), (3L, "HELLO   world"),
       (4L, "different text"), (5L, "Different;text"), // canonicalizes APART (no space)
@@ -124,7 +124,7 @@ class InvariantSpec2 extends SparkSpec {
 
   test("oov_rate: bounds + exact recomputation against the top-20 vocabulary") {
     val texts = sample(genDoc, 200, seed0 = 42L)
-    val dir = java.nio.file.Files.createTempDirectory("oovdocs").toString
+    val dir = tempDir("oovdocs").toString
     texts.zipWithIndex.map { case (t, i) =>
       (i.toLong, t, "en", "s", t.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -151,7 +151,7 @@ class InvariantSpec2 extends SparkSpec {
       day <- Gen.choose(0, 40)
     } yield (uid, day)
     val rows = sample(genEvt, 400, seed0 = 1234L)
-    val dir = java.nio.file.Files.createTempDirectory("dauwau").toString
+    val dir = tempDir("dauwau").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     rows.zipWithIndex.map { case ((uid, day), i) =>
       (i.toLong, (t0 + day * 86400000L + (i % 86400) * 1000L) * 1000000L,
@@ -242,7 +242,7 @@ class InvariantSpec2 extends SparkSpec {
   }
 
   test("word_bigram_surprisal: exact recount; gibberish outscores common prose") {
-    val dir = java.nio.file.Files.createTempDirectory("surprisal").toString
+    val dir = tempDir("surprisal").toString
     // ten docs of the SAME common sentence (their bigrams recur 10×) plus
     // one gibberish doc of unique transitions, plus a NULL and an empty
     // text (must vanish from the output, not crash)
@@ -276,7 +276,7 @@ class InvariantSpec2 extends SparkSpec {
   }
 
   test("signal_agreement_audit: exact Spearman recount on a mixed-source corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("sigagree").toString
+    val dir = tempDir("sigagree").toString
     // source sA: 4 docs with varying repetition (TTR) and rarity; sB: one
     // doc only (dropped, rho undefined); NULL/empty text excluded
     val texts: Seq[(Long, String, String)] = Seq(

@@ -7,7 +7,7 @@ import graft.{SparkEntry, SparkSpec}
 class IvfListDriftSpec extends SparkSpec {
 
   test("ivf_list_drift: base/increment counts, growth and share milli") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfdrift").toString
+    val dir = tempDir("ivfdrift").toString
     import spark.implicits._
     def oneHot(d: Int): Array[Float] =
       Array.tabulate(8)(i => if (i == d) 1.0f else 0.0f)

@@ -7,7 +7,7 @@ import graft.{SparkEntry, SparkSpec}
 class KmeansStepSpec extends SparkSpec {
 
   test("kmeans_step: exact inertia and centroid shift on a planted fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("kmeans").toString
+    val dir = tempDir("kmeans").toString
     import spark.implicits._
     def hot(d: Int, scale: Float): Array[Float] =
       Array.tabulate(8)(i => if (i == d) scale else 0.0f)

@@ -15,7 +15,7 @@ class KmeansTrainSpec extends SparkSpec {
           .map(_.asInstanceOf[Long])))
 
   test("fixed-point fixture: self-member centroids converge at round 1") {
-    val dir = java.nio.file.Files.createTempDirectory("kmt").toString
+    val dir = tempDir("kmt").toString
     Seq((1L, Array(1.0f, 0.0f), 0), (2L, Array(0.0f, 1.0f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")

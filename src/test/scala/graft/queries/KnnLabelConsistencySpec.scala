@@ -8,7 +8,7 @@ import graft.{SparkEntry, SparkSpec}
 class KnnLabelConsistencySpec extends SparkSpec {
 
   test("knn_label_consistency: planted mislabeled probe flagged; clean probe passes") {
-    val dir = java.nio.file.Files.createTempDirectory("knnlabel").toString
+    val dir = tempDir("knnlabel").toString
     import spark.implicits._
     def v(x: Float, y: Float, z: Float, w: Float) = Seq(x, y, z, w)
     val rows: Seq[(Long, Seq[Float], Option[Int])] = Seq(

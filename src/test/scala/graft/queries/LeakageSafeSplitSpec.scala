@@ -15,7 +15,7 @@ class LeakageSafeSplitSpec extends SparkSpec {
   }
 
   test("leakage_safe_split: components never span splits; hash rule matches") {
-    val dir = java.nio.file.Files.createTempDirectory("lss").toString
+    val dir = tempDir("lss").toString
     import spark.implicits._
     Seq(
       // a guaranteed near-dup pair (same word set, reordered) + singletons

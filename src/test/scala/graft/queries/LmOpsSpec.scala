@@ -23,7 +23,7 @@ class LmOpsSpec extends SparkSpec {
       .toSeq
 
   test("hand-computed KN fixture: discount, backoff, OOV floor") {
-    val dir = java.nio.file.Files.createTempDirectory("knppl1").toString
+    val dir = tempDir("knppl1").toString
     // Train slice (lang=en): doc1 "a b a b c", doc2 "a b".
     //   c(u,v): (a,b)=3 (b,a)=1 (b,c)=1; c(a)=3 n1u(a)=1; c(b)=2 n1u(b)=2;
     //   n1v(a)=n1v(b)=n1v(c)=1; N1+(..)=3; pcont = 1000000//3 = 333333.
@@ -48,14 +48,14 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("empty training slice degrades to all-OOV floor scoring") {
-    val dir = java.nio.file.Files.createTempDirectory("knppl2").toString
+    val dir = tempDir("knppl2").toString
     writeDocs(dir, Seq((1L, "a b c", "fr", "s0")))
     // no lang=en docs: n1all=0, every p floors to 1 -> 19000 bits, OOV
     assert(ppl(dir) == Seq((1L, 2L, 2L, 19000L)))
   }
 
   test("ccnet buckets: per-source terciles ordered by bits then doc_id") {
-    val dir = java.nio.file.Files.createTempDirectory("knppl3").toString
+    val dir = tempDir("knppl3").toString
     writeDocs(dir, Seq(
       (1L, "a b a b c", "en", "s0"),
       (2L, "a b", "en", "s0"),
@@ -72,7 +72,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("ppl_length_ols: hand-computed moments; degenerate source is NULL") {
-    val dir = java.nio.file.Files.createTempDirectory("knppl4").toString
+    val dir = tempDir("knppl4").toString
     writeDocs(dir, Seq(
       (1L, "a b a b c", "en", "s0"),
       (2L, "a b", "en", "s0"),
@@ -95,7 +95,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("ppl_domain_gap: self-model explains off-reference text") {
-    val dir = java.nio.file.Files.createTempDirectory("knppl5").toString
+    val dir = tempDir("knppl5").toString
     writeDocs(dir, Seq(
       (1L, "a b", "en", "s0"),
       (2L, "c d c d", "fr", "s0")))
@@ -117,7 +117,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("kn_model_drift: additive merge equals retrain; probe rescore") {
-    val dir = java.nio.file.Files.createTempDirectory("knppl6").toString
+    val dir = tempDir("knppl6").toString
     // md5 hash deciles: id4 -> 7 (base slice), id19 -> 9 (increment),
     // id2 -> 5 (probe, fr so never trained on). Base model {(a,b):1}
     // (n1all=1); merged = full-retrain model {(a,b):1,(b,c):1}
@@ -188,7 +188,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("doremi fixture: off-reference domain takes nearly all the weight") {
-    val dir = java.nio.file.Files.createTempDirectory("doremi").toString
+    val dir = tempDir("doremi").toString
     // the ppl_domain_gap fixture split across two sources: s0's doc has
     // NEGATIVE excess (clips to 0, e = 1000); s1's doc carries 18667
     // milli-bits of excess (e = 1667 << 18) and must dominate
@@ -238,7 +238,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("rho fixture: quota of one admits only the high-excess doc") {
-    val dir = java.nio.file.Files.createTempDirectory("rho").toString
+    val dir = tempDir("rho").toString
     // the ppl_domain_gap fixture in one source: doc 1 gap = -1000 (1
     // bigram), doc 2 gap = 18667 (3 bigrams); quota ceil(2/4) = 1 picks
     // doc 2, so cutoff = 18667 and the selected mass is 3 bigrams

@@ -25,7 +25,7 @@ class LshKnobSpec extends graft.SparkSpec {
     // ceil(log2(1e5)) + 4 = 21 → evened to 22. The on-disk BYTE heuristic
     // this replaced would estimate ~2k rows from the sub-MB of parquet and
     // silently pin the 16-bit floor.
-    val dir = java.nio.file.Files.createTempDirectory("lshfooter").toString
+    val dir = tempDir("lshfooter").toString
     spark.range(100000L).selectExpr("id AS vec_id").repartition(40)
       .write.parquet(s"$dir/embeddings.parquet")
     assert(SimilarityOps.lshBitsFor(spark, dir) == 22)

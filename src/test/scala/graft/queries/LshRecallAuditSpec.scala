@@ -34,7 +34,7 @@ class LshRecallAuditSpec extends SparkSpec {
         }
       docs(id) = text
     }
-    val dir = java.nio.file.Files.createTempDirectory("recall").toString
+    val dir = tempDir("recall").toString
     import spark.implicits._
     docs.toSeq.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -23,7 +23,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("media_exact_dedup: payload-hash families, canonical lowest id, bytes saved") {
-    val dir = java.nio.file.Files.createTempDirectory("mdedup").toString
+    val dir = tempDir("mdedup").toString
     // ids 5 and 2 share a payload (canonical 2); 7 unique; 9 NULL (excluded)
     Seq((5L, "same bytes"), (2L, "same bytes"), (7L, "unique"),
         (9L, null.asInstanceOf[String]))

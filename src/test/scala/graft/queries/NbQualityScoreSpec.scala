@@ -9,7 +9,7 @@ import graft.{SparkEntry, SparkSpec}
 class NbQualityScoreSpec extends SparkSpec {
 
   test("nb_quality_score: seed log-odds, doc scores, negative floor") {
-    val dir = java.nio.file.Files.createTempDirectory("nbq").toString
+    val dir = tempDir("nbq").toString
     import spark.implicits._
     Seq(
       (0L, "a a a a b", "en", "s0", 9L),  // positive seed

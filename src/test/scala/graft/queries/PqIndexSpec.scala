@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 
 /** PqIndex: a saved-then-loaded index serves bit-identically to the
@@ -11,7 +9,7 @@ class PqIndexSpec extends SparkSpec {
 
   test("save + serve ≡ in-session pq_adc_topk; artifact shapes correct") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("pqindex").toString
+    val out = tempDir("pqindex").toString
     PqIndex.save(spark, dir, out)
 
     val cb = spark.read.parquet(s"$out/codebook.parquet")
@@ -34,7 +32,7 @@ class PqIndexSpec extends SparkSpec {
 
   test("saveIvfAdc + cold serve ≡ in-session ann_ivfadc_topk, bit-for-bit") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("ivfadcindex").toString
+    val out = tempDir("ivfadcindex").toString
     PqIndex.saveIvfAdc(spark, dir, out)
 
     // the four deployment artifacts exist with index shapes
@@ -60,7 +58,7 @@ class PqIndexSpec extends SparkSpec {
 
   test("saveIvfAdcResidual + cold serve ≡ in-session ann_ivfadc_residual_topk") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("ivfadcresidx").toString
+    val out = tempDir("ivfadcresidx").toString
     PqIndex.saveIvfAdcResidual(spark, dir, out)
 
     assert(spark.read.parquet(s"$out/rcodebook.parquet").count() ==

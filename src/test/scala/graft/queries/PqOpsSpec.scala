@@ -10,7 +10,7 @@ import graft.{SparkEntry, SparkSpec}
 class PqOpsSpec extends SparkSpec {
 
   private def writeFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("pqops").toString
+    val dir = tempDir("pqops").toString
     import spark.implicits._
     def const(c: Float): Array[Float] = Array.fill(64)(c)
     def perSub(cs: Seq[Float]): Array[Float] =
@@ -136,7 +136,7 @@ class PqOpsSpec extends SparkSpec {
   }
 
   test("pq_residual_gain: hand-computed plain-vs-residual distortion split") {
-    val dir = java.nio.file.Files.createTempDirectory("pqres").toString
+    val dir = tempDir("pqres").toString
     import spark.implicits._
     // centroids (vec 0..7): one-hot 1.0 at dim j — all in subspace 0, so
     // every plain code is zero in subspaces 1..3. Corpus (vec 8..23):
@@ -180,7 +180,7 @@ class PqOpsSpec extends SparkSpec {
     // the LARGEST offsets — while the residual codebook represents every
     // member's residual exactly (distortion 0), so residual ADC equals true
     // L2 and recovers the true in-cluster order.
-    val dir = java.nio.file.Files.createTempDirectory("pqresserve").toString
+    val dir = tempDir("pqresserve").toString
     import spark.implicits._
     def vec(hot: Int, offDim: Int, offMag: Float): Array[Float] =
       Array.tabulate(64)(i =>
@@ -270,7 +270,7 @@ class PqOpsSpec extends SparkSpec {
     // = 17, others keep their donor. Re-encode: vec0→64, vec1→144, 13→16,
     // 15→64 via code1 (REASSIGNED 0→1: 144 vs 64), 16→16, 17→0 ⇒
     // distortion_after = 304, gain = floor(1000·640/944) = 677, moved = 1.
-    val dir = java.nio.file.Files.createTempDirectory("pqkm").toString
+    val dir = tempDir("pqkm").toString
     import spark.implicits._
     def const(c: Float): Array[Float] = Array.fill(64)(c)
     val rows =

@@ -12,7 +12,7 @@ class PrivacyOpsSpec extends SparkSpec {
   // driver layout: events.ts is stored as int64 NANOSECONDS (Util.t reads
   // it with nanosAsLong and rescales to micros) — mirror that here
   private def writeEvents(rows: Seq[(Long, Timestamp, Long, String, Double, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("privops").toString
+    val dir = tempDir("privops").toString
     import spark.implicits._
     rows.map { case (id, ts, uid, et, v, p) =>
       (id, ts.getTime * 1000000L, uid, et, v, p)
@@ -67,7 +67,7 @@ class PrivacyOpsSpec extends SparkSpec {
   }
 
   test("text_repetition: Gopher 2-gram/3-gram shares on hand-checked docs") {
-    val dir = java.nio.file.Files.createTempDirectory("textrep").toString
+    val dir = tempDir("textrep").toString
     import spark.implicits._
     Seq(
       // "a a a a": top 2-gram "a a" x3 -> 2*3/4 = 1500 milli;

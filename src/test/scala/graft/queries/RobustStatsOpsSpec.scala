@@ -10,7 +10,7 @@ import graft.{SparkEntry, SparkSpec}
 class RobustStatsOpsSpec extends SparkSpec {
 
   test("quartiles_cont: pos = 1 + q(n-1), boundary-value interpolation") {
-    val dir = java.nio.file.Files.createTempDirectory("quartcont").toString
+    val dir = tempDir("quartcont").toString
     import spark.implicits._
     // priority P: cents 100..400 (n=4); priority Q: singleton 500
     (Seq((1L, 1.00, "P"), (2L, 2.00, "P"), (3L, 3.00, "P"), (4L, 4.00, "P"),
@@ -30,7 +30,7 @@ class RobustStatsOpsSpec extends SparkSpec {
   }
 
   test("outlier_mad: lower-median MAD, 5x gate, MAD=0 degenerate group") {
-    val dir = java.nio.file.Files.createTempDirectory("outliermad").toString
+    val dir = tempDir("outliermad").toString
     import spark.implicits._
     val ts = Timestamp.valueOf("2024-01-01 00:00:00").getTime * 1000000L
     // type t: four identical values + one spike → MAD 0, spike flagged;

@@ -70,7 +70,7 @@ class SemdedupSpec extends SparkSpec {
   }
 
   test("planted geometry: keep-furthest-from-centroid, isolated vec kept") {
-    val dir = java.nio.file.Files.createTempDirectory("semdedup").toString
+    val dir = tempDir("semdedup").toString
     import spark.implicits._
     val dim = 10
     def e(i: Int, s: Double): Array[Float] =
@@ -138,7 +138,7 @@ class SemdedupSpec extends SparkSpec {
   }
 
   test("prototype_prune planted: most-prototypical members pruned, hard tail kept") {
-    val dir = java.nio.file.Files.createTempDirectory("proto").toString
+    val dir = tempDir("proto").toString
     import spark.implicits._
     val dim = 10
     def e(i: Int, s: Double): Array[Float] =

@@ -323,7 +323,7 @@ class SketchOpsSpec extends SparkSpec {
     // empty corpus: every grid row still present, linear counting lands
     // on 0, ratio NULL
     import spark.implicits._
-    val edir = java.nio.file.Files.createTempDirectory("hllpempty").toString
+    val edir = tempDir("hllpempty").toString
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$edir/documents.parquet")
@@ -336,7 +336,7 @@ class SketchOpsSpec extends SparkSpec {
 
   test("hll_distinct_audit: sparse fixture fires the linear-counting branch") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("hllsparse").toString
+    val d = tempDir("hllsparse").toString
     val fixture = Seq(
       (1L, "a b c d e", "en", "s0", 0L),
       (2L, "f g h i j", "en", "s1", 0L),
@@ -436,7 +436,7 @@ class SketchOpsSpec extends SparkSpec {
     }
     // empty corpus: all six grid rows survive with NULL estimates
     import spark.implicits._
-    val edir = java.nio.file.Files.createTempDirectory("rankempty").toString
+    val edir = tempDir("rankempty").toString
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$edir/documents.parquet")

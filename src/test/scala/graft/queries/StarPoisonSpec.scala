@@ -48,7 +48,7 @@ class StarPoisonSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("starpoison").toString
+    val d = tempDir("starpoison").toString
     import spark.implicits._
 
     Seq[(java.lang.Integer, String)](

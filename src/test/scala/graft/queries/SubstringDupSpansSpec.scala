@@ -40,7 +40,7 @@ class SubstringDupSpansSpec extends SparkSpec {
     }.toSet
 
   test("planted spans: cross-doc run, self-repeat split at gap > 8, merge at gap = 8") {
-    val dir = java.nio.file.Files.createTempDirectory("dupspans").toString
+    val dir = tempDir("dupspans").toString
     import spark.implicits._
     val sRun = (1 to 10).map(i => s"s$i").mkString(" ")
     val xRun = (1 to 8).map(i => s"x$i").mkString(" ")

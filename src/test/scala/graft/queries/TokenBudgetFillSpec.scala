@@ -7,7 +7,7 @@ import graft.{SparkEntry, SparkSpec}
 class TokenBudgetFillSpec extends SparkSpec {
 
   test("token_budget_fill: fully taken / marginal partial / excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("tbf").toString
+    val dir = tempDir("tbf").toString
     import spark.implicits._
     Seq(
       // srcA: 1 doc, 6 words, has a stopword -> quality 1000, 6 tokens

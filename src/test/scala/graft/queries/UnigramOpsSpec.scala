@@ -23,7 +23,7 @@ class UnigramOpsSpec extends SparkSpec {
         r.getAs[String]("seg")))
 
   test("hand-computed fixture: costs, tie-break on piece count, EM counts") {
-    val dir = java.nio.file.Files.createTempDirectory("uni1").toString
+    val dir = tempDir("uni1").toString
     import spark.implicits._
     // words: ab x6, abab x2, cd x1.
     // piece counts: a 10, b 10, ab 10, ba 2, aba 2, bab 2, abab 2,
@@ -131,7 +131,7 @@ class UnigramOpsSpec extends SparkSpec {
   }
 
   test("unigram_vocab_prune fixture: never-used pieces pruned first") {
-    val dir = java.nio.file.Files.createTempDirectory("uniprune").toString
+    val dir = tempDir("uniprune").toString
     import spark.implicits._
     // the unigram fixture corpus: losses ab 12000, abab 8000, cd 5000,
     // then the never-used {aba, ba, bab} at 0 -> rk 4,5,6 of nm=6;
@@ -197,7 +197,7 @@ class UnigramOpsSpec extends SparkSpec {
   }
 
   test("unigram_prune_effect fixture: pruning only never-used pieces costs nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("uniprune2").toString
+    val dir = tempDir("uniprune2").toString
     import spark.implicits._
     val docs = (1L to 6L).map(i => (i, "ab")) ++
       (7L to 8L).map(i => (i, "abab")) ++ Seq((9L, "cd"))
@@ -243,7 +243,7 @@ class UnigramOpsSpec extends SparkSpec {
         r.getAs[Long]("uni_fertility_milli")))
 
   test("tokenizer_fertility: hand-computed two-source fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("unif").toString
+    val dir = tempDir("unif").toString
     import spark.implicits._
     // the BpeMergeSpec ROI corpus: srcA abab x3 + ab x2, srcB cd x5.
     // BPE fuses every word to ONE symbol in 3 merges; unigram vocab
@@ -263,7 +263,7 @@ class UnigramOpsSpec extends SparkSpec {
 
   test("tokenizer_fertility universe is MaxWordLen-bounded: a >64-char " +
       "word counts in bpe_compression but not here") {
-    val dir = java.nio.file.Files.createTempDirectory("unil").toString
+    val dir = tempDir("unil").toString
     import spark.implicits._
     // srcA: ab x5 plus ONE 65-char junk run (a x65). The junk word is
     // inside bpe_compression's unbounded universe (n_words = 6,
@@ -325,7 +325,7 @@ class UnigramOpsSpec extends SparkSpec {
   }
 
   test("wordpiece fixture: longest-match provably pays vs the DP") {
-    val dir = java.nio.file.Files.createTempDirectory("wp1").toString
+    val dir = tempDir("wp1").toString
     import spark.implicits._
     // 'park' is cheap (50 occurrences), 'spar' rare (only inside
     // 'spark'), and 's' is boosted far beyond 'spar' by the 'si' words —

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
@@ -147,7 +146,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
     * order, which is the in-order contract). */
   private def runParity(seed: Int, slices: Int): Unit = {
       val evs = dirtyEvents(seed, 1000)
-      val root = Files.createTempDirectory(s"streamfuzz$seed")
+      val root = tempDir(s"streamfuzz$seed")
 
       // stream side: Event-typed parquet, written ONCE; `stream` is a def
       // because each runToMemory consumes its own fresh source
@@ -358,7 +357,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
 
   for (seed <- Seq(808, 909)) {
     test(s"fuzz seed $seed: lineDedupStream, batch line_dedup, and the recount agree on a dirty corpus") {
-      val root = Files.createTempDirectory(s"linefuzz$seed")
+      val root = tempDir(s"linefuzz$seed")
       val docsSeq = dirtyDocs(seed, 250)
       val docs = docsSeq.toDF("doc_id", "text")
       docs.write.parquet(root.resolve("documents.parquet").toString)
@@ -420,7 +419,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
   for (seed <- Seq(505, 606)) {
     test(s"fuzz seed $seed: knScoreStream, batch kn_bigram_ppl, and the " +
         "JVM KN recount agree on a dirty corpus") {
-      val root = Files.createTempDirectory(s"knfuzz$seed")
+      val root = tempDir(s"knfuzz$seed")
       val langs = Vector("en", "fr", null, "zh", "en")
       val full = dirtyDocs(seed, 250).map { case (id, t) =>
         (id, t, langs((id % 5).toInt), s"s${id % 3}",
@@ -489,7 +488,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
   for (seed <- Seq(525, 626)) {
     test(s"fuzz seed $seed: dsirScoreStream, batch dsir_hashed_ngram_weights," +
         " and the JVM recount agree on a dirty corpus") {
-      val root = Files.createTempDirectory(s"dsirfuzz$seed")
+      val root = tempDir(s"dsirfuzz$seed")
       val langs = Vector("en", "fr", null, "zh", "en")
       val full = dirtyDocs(seed, 250).map { case (id, t) =>
         (id, t, langs((id % 5).toInt), s"s${id % 3}",
@@ -550,7 +549,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
   for (seed <- Seq(535, 636)) {
     test(s"fuzz seed $seed: temperatureSampleStream, batch temperature_sample_audit," +
         " and the JVM recount agree on a dirty corpus") {
-      val root = Files.createTempDirectory(s"tsampfuzz$seed")
+      val root = tempDir(s"tsampfuzz$seed")
       val full = dirtyDocs(seed, 250).map { case (id, t) =>
         (id, t, "en", if (id % 7 == 0) null else s"s${id % 3}",
           Option(t).map(_.length.toLong).getOrElse(0L))
@@ -612,7 +611,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
 
   for (seed <- Seq(515, 616)) {
     test(s"fuzz seed $seed: unigramSegmentStream equals the JVM Viterbi recount on a dirty corpus") {
-      val root = Files.createTempDirectory(s"unifuzz$seed")
+      val root = tempDir(s"unifuzz$seed")
       val docsSeq = dirtyDocs(seed, 200)
       docsSeq.toDF("doc_id", "text")
         .write.parquet(root.resolve("documents.parquet").toString)
@@ -669,7 +668,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
 
   for (seed <- Seq(111, 222)) {
     test(s"fuzz seed $seed: ivfAssignStream equals the JVM recount and the batch drift counts") {
-      val root = Files.createTempDirectory(s"ivffuzz$seed")
+      val root = tempDir(s"ivffuzz$seed")
       val vecsSeq = dirtyVecs(seed, 200)
       val vecs = vecsSeq.map { case (id, v) => (id, v, 0) }
         .toDF("vec_id", "embedding", "label")
@@ -730,7 +729,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
   for (seed <- Seq(606, 707)) {
     test(s"fuzz seed $seed: pruneStream verdicts equal the batch prune table on a dirty corpus") {
       import org.apache.spark.sql.functions.col
-      val root = Files.createTempDirectory(s"prunefuzz$seed")
+      val root = tempDir(s"prunefuzz$seed")
       val docs = dirtyDocs(seed, 300).toDF("doc_id", "text")
       // batch side reads a dir via the query surface: write the corpus as
       // the documents table of a scratch dir
@@ -758,7 +757,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
   for (seed <- Seq(747, 848)) {
     test(s"fuzz seed $seed: tvDriftStream, batch source_tv_drift, and the" +
         " JVM TV recount agree on a dirty corpus") {
-      val root = Files.createTempDirectory(s"tvfuzz$seed")
+      val root = tempDir(s"tvfuzz$seed")
       val full = dirtyDocs(seed, 250).map { case (id, t) =>
         (id, t, "en", if (id % 7 == 0) null else s"s${id % 3}",
           Option(t).map(_.length.toLong).getOrElse(0L))
@@ -817,7 +816,7 @@ class StreamingFuzzParitySpec extends SparkSpec {
   for (seed <- Seq(545, 646)) {
     test(s"fuzz seed $seed: cms/kmv sketch streams, the batch sketches," +
         " and the JVM recount agree on a dirty corpus") {
-      val root = Files.createTempDirectory(s"sketchfuzz$seed")
+      val root = tempDir(s"sketchfuzz$seed")
       val full = dirtyDocs(seed, 250).map { case (id, t) =>
         (id, t, "en", if (id % 7 == 0) null else s"s${id % 3}",
           Option(t).map(_.length.toLong).getOrElse(0L))

@@ -26,7 +26,7 @@ class StreamingPipelineSpec extends SparkSpec {
     }.mkString(";")
 
   test("pedidosStream: file queue → typed dedup merge, checkpoint is the ledger") {
-    val root = Files.createTempDirectory("stream")
+    val root = tempDir("stream")
     val landing = Files.createDirectories(root.resolve("landing"))
     val dw = root.resolve("dw").toString
     val ckpt = root.resolve("ckpt").toString
@@ -62,7 +62,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("windowedCounts: watermarked sliding windows over a bounded stream") {
-    val root = Files.createTempDirectory("winstream")
+    val root = tempDir("winstream")
     val src = root.resolve("events")
     Seq(
       (1L, ts("2024-01-01 00:01:00"), 10L, "click", 1.0),
@@ -88,7 +88,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("decontaminateStream: stream-static verdicts, stateless append mode") {
-    val root = Files.createTempDirectory("decontstream")
+    val root = tempDir("decontstream")
     val src = root.resolve("docs")
     Seq(
       (1L, "alpha beta gamma delta"),        // shares "alpha beta gamma"
@@ -111,7 +111,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("bloomGateStream: one-sided verdicts — zero bloom hits is provably clean") {
-    val root = Files.createTempDirectory("bloomgate")
+    val root = tempDir("bloomgate")
     val src = root.resolve("docs")
     val sf = "/root/testdata/sf0.001"
     // stream the real train split; static side = the real bench grams
@@ -169,7 +169,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("ivfAssignStream: one-hot arrivals assign exactly; per-list counts match ivf_list_drift") {
     import org.apache.spark.sql.functions.col
     // planted: quantizer dims from the one-hot corpus, arrivals match lists
-    val root = Files.createTempDirectory("ivfstream")
+    val root = tempDir("ivfstream")
     val src = root.resolve("vecs") // the parquet write creates it
     def oneHot(d: Int): Array[Float] =
       Array.tabulate(8)(i => if (i == d) 1.0f else 0.0f)
@@ -217,7 +217,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("nbScoreStream: exact batch parity; unseen words take the Laplace default") {
     import org.apache.spark.sql.functions.col
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("nbstream")
+    val root = tempDir("nbstream")
     val src = Files.createDirectories(root.resolve("docs"))
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       src.resolve("documents.parquet"))
@@ -256,7 +256,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("knScoreStream: exact batch parity with kn_bigram_ppl") {
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("knstream")
+    val root = tempDir("knstream")
     val src = Files.createDirectories(root.resolve("docs"))
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       src.resolve("documents.parquet"))
@@ -292,7 +292,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("temperatureSampleStream: aggregated parity with temperature_sample_audit") {
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("tsampstream")
+    val root = tempDir("tsampstream")
     val src = Files.createDirectories(root.resolve("docs"))
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       src.resolve("documents.parquet"))
@@ -336,7 +336,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("dsirScoreStream: exact batch parity with dsir_hashed_ngram_weights") {
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("dsirstream")
+    val root = tempDir("dsirstream")
     val src = Files.createDirectories(root.resolve("docs"))
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       src.resolve("documents.parquet"))
@@ -413,7 +413,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("cmsCellStream: running counters ≡ batch cells, additive across batches") {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("cmsstream")
+    val root = tempDir("cmsstream")
     val src = Files.createDirectories(root.resolve("docs"))
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
     // two files → two micro-batches under maxFilesPerTrigger(1): the
@@ -461,7 +461,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("countSketchStream: running signed counters ≡ batch cells across batches") {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, struct, max, sum}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("csstream")
+    val root = tempDir("csstream")
     val src = Files.createDirectories(root.resolve("docs"))
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
     val coin = coalesce(expr(
@@ -505,7 +505,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("rankCellStream: running quantile-sketch cells ≡ batch cells across batches") {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("rankstream")
+    val root = tempDir("rankstream")
     val src = Files.createDirectories(root.resolve("docs"))
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
     val coin = coalesce(expr(
@@ -548,7 +548,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("zipfDriftStream: final emission ≡ batch zipf_slope_audit; drift emitted across batches") {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("zipfstream")
+    val root = tempDir("zipfstream")
     val src = Files.createDirectories(root.resolve("docs"))
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
     val coin = coalesce(expr(
@@ -612,7 +612,7 @@ class StreamingPipelineSpec extends SparkSpec {
     "mid-stream rows are the half-corpus's own exact TV") {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("tvstream")
+    val root = tempDir("tvstream")
     val src = Files.createDirectories(root.resolve("docs"))
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
     // NULL-safe md5-coin halving (the kmv lesson: a doc_id parity split
@@ -649,7 +649,7 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(expected.nonEmpty)
     // the mid-stream emission is the HALF corpus's own exact TV: replay
     // the batch query on batch a's documents alone
-    val half = Files.createTempDirectory("tvhalf")
+    val half = tempDir("tvhalf")
     corpus.filter(coin === "0")
       .write.parquet(half.resolve("documents.parquet").toString)
     val halfExpected = graft.SparkEntry
@@ -666,7 +666,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("kmvSketchStream: final per-source sketch ≡ batch bottom-k recount") {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("kmvstream")
+    val root = tempDir("kmvstream")
     val src = Files.createDirectories(root.resolve("docs"))
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
     // NULL-safe md5-coin halving (a plain doc_id parity would alias with
@@ -719,7 +719,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("prioritySampleStream: final per-source rows ≡ batch priority_sample_audit") {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("priostream")
+    val root = tempDir("priostream")
     val src = Files.createDirectories(root.resolve("docs"))
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
     val coin = coalesce(expr(
@@ -757,7 +757,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("semanticGateStream: exact batch parity with decontaminate_semantic") {
     import org.apache.spark.sql.functions.{col, not}
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("semgate")
+    val root = tempDir("semgate")
     val corpus = spark.read.parquet(s"$sf/embeddings.parquet")
     // arrivals = the train side (bench items live outside the train feed)
     val src = root.resolve("arrivals")
@@ -784,7 +784,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("pqEncodeStream: exact batch parity with the PQ encode on real sf0.001 data") {
     import org.apache.spark.sql.functions.col
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("pqstream")
+    val root = tempDir("pqstream")
     val src = Files.createDirectories(root.resolve("vecs"))
     Files.copy(java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
       src.resolve("embeddings.parquet"))
@@ -835,7 +835,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val idx = graft.queries.SimilarityOps.graphNeighborIndex(spark, sf)
     val entry = graft.queries.SimilarityOps.graphEntryRow(spark, sf)
-    val src = Files.createTempDirectory("annserve").resolve("vecs")
+    val src = tempDir("annserve").resolve("vecs")
     // arrivals = the whole embeddings table (every valid vector is a
     // query), plus one planted zero-norm row that must drop
     // (the parquet write below creates src itself)
@@ -880,7 +880,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val planes = graft.queries.SimilarityOps.lshPlanesRow(spark, sf)
     val idx = graft.queries.SimilarityOps.lshBucketMembersIndex(spark, sf)
-    val src = Files.createTempDirectory("anninsert").resolve("vecs")
+    val src = tempDir("anninsert").resolve("vecs")
     spark.read.parquet(s"$sf/embeddings.parquet").write.parquet(src.toString)
     val stream = spark.readStream
       .schema(spark.read.parquet(src.toString).schema)
@@ -974,7 +974,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val planes = graft.queries.SimilarityOps.lshPlanesRow(spark, sf)
     val idx = graft.queries.SimilarityOps
       .lshBucketMembersIndex(spark, sf, corpusOnly = true)
-    val src = Files.createTempDirectory("anninsgate").resolve("vecs")
+    val src = tempDir("anninsgate").resolve("vecs")
     // arrivals = the increment slice, the batch query's split
     spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") % 10 === 0)
@@ -1006,7 +1006,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val all = spark.read.parquet(s"$sf/documents.parquet")
     val winIdx = StreamingPipeline.corpusWindowIndex(
       all.filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0))
-    val src = Files.createTempDirectory("spancutparity").resolve("docs")
+    val src = tempDir("spancutparity").resolve("docs")
     Files.createDirectories(src)
     // arrivals = the increment slice, as its own parquet dir
     all.filter(org.apache.spark.sql.functions.col("doc_id") % 10 === 0)
@@ -1045,7 +1045,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("lineDedupStream: exact batch parity with line_dedup on real sf0.001 data") {
     val sf = "/root/testdata/sf0.001"
     // the file stream source wants a DIRECTORY; testdata ships one file
-    val src = Files.createTempDirectory("linededupparity").resolve("docs")
+    val src = tempDir("linededupparity").resolve("docs")
     Files.createDirectories(src)
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       src.resolve("documents.parquet"))
@@ -1083,7 +1083,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("lineDedupStream: chunk state survives across micro-batches") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = Files.createTempDirectory("linededupstream")
+    val root = tempDir("linededupstream")
     val src = Files.createDirectories(root.resolve("docs"))
     val ckpt = root.resolve("ckpt").toString
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
@@ -1121,7 +1121,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("decontaminateStream: oversized benchmark set fails the contract, not OOM") {
-    val root = Files.createTempDirectory("decontguard")
+    val root = tempDir("decontguard")
     val src = root.resolve("docs")
     Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
       .write.parquet(src.toString)
@@ -1152,7 +1152,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("classifyIncrementStream: stateless exact/near/new against static corpus indexes") {
-    val root = Files.createTempDirectory("classtream")
+    val root = tempDir("classtream")
     val src = root.resolve("docs")
     val corpus = Seq(
       (1L, "alpha beta gamma delta", "en", "src0", 0L),
@@ -1182,7 +1182,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("dedupStream: duplicate arrivals within the watermark are dropped") {
-    val root = Files.createTempDirectory("dedupstream")
+    val root = tempDir("dedupstream")
     val src = root.resolve("events")
     Seq(
       (1L, ts("2024-01-01 00:01:00"), 10L, "click", 1.0),
@@ -1202,7 +1202,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("asofEnrichStream: exact batch parity with asof_join on real sf0.001 data") {
     import org.apache.spark.sql.functions._
-    val srcDir = Files.createTempDirectory("asofstream")
+    val srcDir = tempDir("asofstream")
     Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       srcDir.resolve("events.parquet"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1234,7 +1234,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("asofEnrichStream planted fixture: inclusive bound, NULL on no-click, key isolation") {
-    val root = Files.createTempDirectory("asoffix")
+    val root = tempDir("asoffix")
     val src = root.resolve("purchases")
     Seq(
       (100L, ts("2024-01-01 10:00:00"), 1L, "purchase", 1.0), // after q_mid
@@ -1267,7 +1267,7 @@ class StreamingPipelineSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // the file stream source needs a DIRECTORY; the testdata table is a
     // single file — stage it into one
-    val srcDir = Files.createTempDirectory("ssjoin")
+    val srcDir = tempDir("ssjoin")
     Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       srcDir.resolve("events.parquet"))
     val dir = srcDir.toString
@@ -1312,7 +1312,7 @@ class StreamingPipelineSpec extends SparkSpec {
   test("stream-stream LEFT OUTER join: unmatched rows emit after the watermark expires their window") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val root = Files.createTempDirectory("ssleftjoin")
+    val root = tempDir("ssleftjoin")
     val src = Files.createDirectories(root.resolve("events"))
     val ckpt = root.resolve("ckpt").toString
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
@@ -1374,7 +1374,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("sessionizeWithTimeout: idle session flushes when the watermark passes the gap") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = Files.createTempDirectory("sesstimeout")
+    val root = tempDir("sesstimeout")
     val src = Files.createDirectories(root.resolve("events"))
     val ckpt = root.resolve("ckpt").toString
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
@@ -1419,7 +1419,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("funnelStream: stage transitions across micro-batches, strictly-after rule") {
-    val root = Files.createTempDirectory("funnelstream")
+    val root = tempDir("funnelstream")
     val src = root.resolve("events")
     Files.createDirectories(src)
     // batch 1: user 1 signs up and views; user 2 views BEFORE signing up;
@@ -1456,7 +1456,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("funnelStream parity with the batch event_funnel on an identical corpus") {
-    val root = Files.createTempDirectory("funnelparity")
+    val root = tempDir("funnelparity")
     // seeded corpus, event-time-ordered arrival (the parity contract)
     val rnd = new scala.util.Random(42)
     val types = Seq("signup", "view", "click", "purchase", "error")
@@ -1493,7 +1493,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("cohortStream parity with batch cohort_retention on an identical corpus") {
-    val root = Files.createTempDirectory("cohortparity")
+    val root = tempDir("cohortparity")
     val rnd = new scala.util.Random(7)
     // 20 users, events spread over ~6 weeks, event-time-ordered arrival
     val rows = (1 to 300).map { i =>
@@ -1529,7 +1529,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("sessionize: explicit keyed state with gap rule") {
-    val root = Files.createTempDirectory("sessstream")
+    val root = tempDir("sessstream")
     val src = root.resolve("events")
     Seq(
       StreamingPipeline.Event(1, ts("2024-01-01 00:00:00"), 1, "a", 1.0),
@@ -1553,7 +1553,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("debounceStream: previous-event gate holds across micro-batches; types are independent") {
-    val root = Files.createTempDirectory("debstream")
+    val root = tempDir("debstream")
     val src = root.resolve("events")
     Files.createDirectories(src)
     // batch 1: user 1 clicks at 00:00 (kept), 00:02 (suppressed — < 5 min),
@@ -1582,7 +1582,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("debounceStream parity with the batch event_debounce on an identical corpus") {
-    val root = Files.createTempDirectory("debparity")
+    val root = tempDir("debparity")
     val rnd = new scala.util.Random(11)
     val types = Seq("click", "view", "error")
     // bursty arrivals: inter-event gaps cluster under AND over the 5-min
@@ -1618,7 +1618,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$dir/documents.parquet")
     val canonIdx = graft.queries.TextOps.canonIndex(corpus)
     // file streams need a DIRECTORY source; the driver corpus is one file
-    val srcDir = Files.createTempDirectory("prunestream")
+    val srcDir = tempDir("prunestream")
     corpus.write.mode("overwrite").parquet(srcDir.resolve("docs").toString)
     val stream = spark.readStream.schema(corpus.schema)
       .parquet(srcDir.resolve("docs").toString)
@@ -1654,7 +1654,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("attributionJoinStream: stream-stream left outer, watermark expires state") {
-    val root = Files.createTempDirectory("attrjoin")
+    val root = tempDir("attrjoin")
     val src = root.resolve("events")
     Files.createDirectories(src)
     // real traffic: matched pair (u10), out-of-window purchase (u11),
@@ -1725,7 +1725,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("unigramSegmentStream: exact batch parity; OOV words segment at sentinel cost") {
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("unistream")
+    val root = tempDir("unistream")
     val src = Files.createDirectories(root.resolve("docs"))
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       src.resolve("documents.parquet"))
@@ -1757,7 +1757,7 @@ class StreamingPipelineSpec extends SparkSpec {
     // fixture vocabulary, so "ef" still segments — as ONE sentinel piece
     // (the DP minimizes sentinel count: 1·10⁹ beats e·f at 2·10⁹) — the
     // cost ≥ 10⁹ retrain signal, not a dropped row
-    val fixDir = Files.createTempDirectory("unifix").toString
+    val fixDir = tempDir("unifix").toString
     ((1L to 6L).map(i => (i, "ab")) ++ Seq((7L, "abab"), (8L, "cd")))
       .map { case (id, t) => (id, t, "en", "s0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -11,7 +11,7 @@
 # back — previously lived in PLAN.md prose and had to be reinvented each
 # session. Now it is this tool.
 #
-# Usage: tools/controlled_bench.sh <baseline_ref> [out_prefix] [sfdir] [max_load] [pairs] [rule]
+# Usage: tools/controlled_bench.sh <baseline_ref> [out_prefix] [sfdir] [max_load] [pairs]
 #   baseline_ref  any commit-ish (e.g. the previous round's bench commit)
 #   out_prefix    output prefix (default BENCH_ctrl) — writes
 #                 <prefix>_head.json, <prefix>_base.json, <prefix>_ratio.json
@@ -20,49 +20,37 @@
 #   pairs         how many (base, head) interleaved pairs to run
 #                 (default 1; per-query times keep the MINIMUM across
 #                 pairs — the classic noise floor estimator)
-#   rule          measurement rule pin, 'fullrow' (default) or 'count'
-#                 (BASELINE.md "Recorded sf0.1 bench anchor"): 'count'
-#                 exports SPARK_GRAFT_BENCH_COUNTRULE=1 to BOTH trees —
-#                 required when the baseline ref predates the round-17
-#                 full-row rule, because such trees can only measure the
-#                 count rule and a mixed-rule ratio is meaningless. The
-#                 script REFUSES a fullrow run against a pre-fullrow
-#                 baseline tree rather than silently mixing rules.
+#
+# Both trees must time queries with the full-row action (the bit_xor of
+# xxhash64 over every column, BASELINE.md "Recorded sf0.1 bench anchor");
+# the script REFUSES a baseline tree that predates it rather than report
+# a ratio between two different measurement rules.
 #
 # Output: <prefix>_ratio.json with the common-query totals, the ratio,
-# the rule used, and per-query regressions at the judge's 1.1x / 0.8 s
+# and per-query regressions at the judge's 1.1x / 0.8 s
 # threshold.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-ref=${1:?usage: controlled_bench.sh <baseline_ref> [out_prefix] [sfdir] [max_load] [pairs] [rule]}
+ref=${1:?usage: controlled_bench.sh <baseline_ref> [out_prefix] [sfdir] [max_load] [pairs]}
 prefix=${2:-BENCH_ctrl}
 sf=${3:-/root/testdata/sf0.1}
 max_load=${4:-4.0}
 pairs=${5:-1}
-rule=${6:-fullrow}
-case "$rule" in
-  fullrow) export -n SPARK_GRAFT_BENCH_COUNTRULE 2>/dev/null || true
-           unset SPARK_GRAFT_BENCH_COUNTRULE || true ;;
-  count)   export SPARK_GRAFT_BENCH_COUNTRULE=1 ;;
-  *) echo "controlled_bench: rule must be 'fullrow' or 'count' (got '$rule')" >&2; exit 1 ;;
-esac
 # normalize the prefix to an absolute path: run_bench cd's into trees
 case "$prefix" in /*) : ;; *) prefix="$PWD/$prefix" ;; esac
 
 refsha=$(git rev-parse --verify "$ref^{commit}")
 wtroot=$(mktemp -d /tmp/ctrlbench.XXXXXX)
 wt=$wtroot/base
-echo "controlled_bench: baseline $refsha -> worktree $wt (rule=$rule)" >&2
+echo "controlled_bench: baseline $refsha -> worktree $wt" >&2
 git worktree add --detach "$wt" "$refsha" >&2
 
-# rule-pin guard: a 'fullrow' comparison needs BOTH trees to implement the
-# full-row rule; pre-round-17 trees only have the count rule, so measuring
-# them "fullrow" silently produces a mixed-rule ratio. Detect by the
-# COUNTRULE knob's presence in the baseline tree's Bench.scala.
-if [ "$rule" = fullrow ] && \
-   ! grep -q SPARK_GRAFT_BENCH_COUNTRULE "$wt/src/main/scala/graft/Bench.scala"; then
-  echo "controlled_bench: baseline $refsha predates the full-row rule —" \
-       "re-run with rule=count for an apples-to-apples capture" >&2
+# rule guard: trees before round 17 timed queries with a bare count(); the
+# full-row action lives in Bench.scala up to its move into Session.scala
+if ! grep -qs xxhash64 "$wt/src/main/scala/graft/Bench.scala" \
+     "$wt/src/main/scala/graft/Session.scala"; then
+  echo "controlled_bench: baseline $refsha predates the full-row rule;" \
+       "its times are not comparable" >&2
   git worktree remove --force "$wt" >/dev/null 2>&1 || true
   rm -rf "$wtroot"
   exit 1
@@ -115,10 +103,10 @@ for i in $(seq 1 "$pairs"); do
   headfiles+=("${prefix}_head_$i.json")
 done
 
-python3 - "$prefix" "$refsha" "$rule" "${basefiles[@]}" -- "${headfiles[@]}" <<'EOF'
+python3 - "$prefix" "$refsha" "${basefiles[@]}" -- "${headfiles[@]}" <<'EOF'
 import json, sys
-prefix, refsha, rule = sys.argv[1], sys.argv[2], sys.argv[3]
-rest = sys.argv[4:]
+prefix, refsha = sys.argv[1], sys.argv[2]
+rest = sys.argv[3:]
 split = rest.index("--")
 basefiles, headfiles = rest[:split], rest[split + 1:]
 
@@ -153,7 +141,6 @@ regress = sorted((q for q in common
 new_qs = sorted(set(head) - set(base))
 result = {
     "baseline_ref": refsha,
-    "rule": rule,
     "common_n": len(common),
     "base_total_sec": round(bt, 2),
     "head_total_sec": round(ht, 2),

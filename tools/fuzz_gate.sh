@@ -4,7 +4,9 @@
 # DuckDB oracle twin — the latent-divergence detector the fixed testdata
 # can't be (every cross-engine bug class found so far — NULL ordering,
 # NULL vs '' propagation, malformed-JSON handling, zero-norm vectors, ANSI
-# casts — only shows on dirty inputs).
+# casts — only shows on dirty inputs). The compare is the dtype-exact
+# driver mirror (tools/verify_driver_mirror.py); its full report is left in
+# /tmp/graft_fuzz_<seed>_out.log.
 #
 # Usage: tools/fuzz_gate.sh [seeds...]   (default: 1 2)
 set -euo pipefail
@@ -18,11 +20,11 @@ for seed in ${seeds[@]}; do
   python3 tools/fuzz_gen.py "$dir" "$seed"
   sbt -batch "runMain graft.Verify $dir $out" >/dev/null 2>&1 || {
     echo "fuzz_gate: Verify crashed on seed $seed" >&2; rc=1; continue; }
-  if python3 tools/verify_local.py "$dir" "$out" | tail -1 | grep -q " 0 failed"; then
+  if python3 tools/verify_driver_mirror.py "$dir" "$out" > "$out.log"; then
     echo "fuzz_gate: seed $seed GREEN"
   else
     echo "fuzz_gate: seed $seed FAILED:" >&2
-    python3 tools/verify_local.py "$dir" "$out" | grep ^FAIL >&2 || true
+    grep -A3 ^FAIL "$out.log" >&2 || true
     rc=1
   fi
 done

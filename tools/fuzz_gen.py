@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Differential-fuzz corpus generator: a seeded, DIRTY random corpus in the
 driver's exact parquet schemas (incl. timestamp[ns] events and timestamp[ms]
-orders/lineitem), so the full Verify + verify_local gate can run on inputs
+orders/lineitem), so the full Verify + driver-mirror gate can run on inputs
 the fixed testdata never shows it — NULL keys, unicode, negatives, duplicate
 ids, empty/whitespace texts, empty vectors, malformed JSON.
 
@@ -16,11 +16,12 @@ Usage:
 then:
 
     sbt "runMain graft.Verify <outDir> /tmp/fuzz_out"
-    tools/verify_local.py <outDir> /tmp/fuzz_out
+    tools/verify_driver_mirror.py <outDir> /tmp/fuzz_out
 
-Any FAIL is a real latent cross-engine divergence (the class every ADVICE
-finding so far has belonged to), not box noise: both engines read the same
-files and the compare is the driver's own canonicalization.
+(tools/fuzz_gate.sh runs both for a list of seeds.) Any FAIL is a real
+latent cross-engine divergence (the class every ADVICE finding so far has
+belonged to), not box noise: both engines read the same files and the
+compare is the driver's own, dtype-exact canonicalization.
 
 Kept inside documented domains on purpose: |money| <= 1e6 and value counts
 small enough that the stats_agg sum-of-squares int64 bound (~30M units,
