@@ -1,13 +1,64 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark harness: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query wall seconds.
   * Queries run in sorted name order after a small uncounted JVM warm-up so
   * first-query JIT noise doesn't land on an arbitrary query; each is timed
   * by [[Session.fullRow]] on a [[Session.local]] session. */
 object Bench {
+
+  /** The release schedule: query-name prefix → cache-name prefixes. The
+    * caches on a row are consumed ONLY inside that prefix's wave of the
+    * sorted walk, so once the walk leaves the wave they have no future
+    * reader this run, and [[graft.queries.Util.releaseFamily]] frees them
+    * outside any query's timed window (the r15 finding: resident hanf
+    * register levels displaced pagerank_links' warm state, 2.6 → 5.6 s
+    * in-suite, with zero code change). A cache released too early would
+    * silently rebuild inside a later query's timed window: SparkEntrySpec
+    * walks the queries in this order, applies this schedule, and fails on
+    * such a rebuild, on a row that matches no query and on a row that
+    * releases nothing. */
+  val releaseSchedule: Seq[(String, Seq[String])] = Seq(
+    // the serve graphs, their hop-1 pool and the checkpointed builds; the
+    // quantized base stays: kmeans/knn/pq/ivf consumers sort later
+    "ann_graph_" -> Seq("greedyGraph", "graphHop1", "hnsw"),
+    // the batch insert gate is the candidate pool's only consumer
+    "ann_insert_gate" -> Seq("insGateCand"),
+    "bloom_fpr_sweep" -> Seq("bloomSweep"),
+    // rankValCounts/BySrc feed only the two cms_rank_* audits
+    "cms_rank_" -> Seq("rankValCounts"),
+    "coverage_" -> Seq("covDocGram"),
+    // the increment chain's token/map caches end with dup_span_incremental
+    "dup_" -> Seq("dupDblInc"),
+    "dsir_" -> Seq("dsirOcc"),
+    "epoch_" -> Seq("epochSlices"),
+    // the HyperANF register levels; hanfEdges is edge-list-sized and kept
+    "graph_" -> Seq("hanfRegs", "hanfPacked", "hanfSwar"),
+    // full + sampled signature relations and the recall-audit bands:
+    // last consumers are minhash_band_sweep / minhash_estimate_audit
+    "minhash_" -> Seq("minhashSigs", "recallAudit"),
+    "pagerank_links" -> Seq("pagerankEdges"),
+    // the PQ codebooks end with pq_residual_gain
+    "pq_" -> Seq("pqEncoded", "pqResidualEncoded"),
+    // knFrame/selfFrame span ccnet→rho_excess_select (LmOps)
+    "rho_excess_select" -> Seq("knPplFrame", "knTrainCounts"),
+    // the IVF serve index: prototype_prune and semdedup_prune read it
+    // after the pq_ wave
+    "semdedup_" -> Seq("semanticDedupAssigned", "ivfServeAssigned"),
+    // last embedding-family consumer in the sorted walk
+    "sq8_" -> Seq("quantizedBase", "lshState", "knnBrute"),
+    // span-doubling levels + apply segments end with substring_dedup_*
+    "substring_" -> Seq("dupDbl", "dupApply"),
+    "tfidf_topk" -> Seq("tfRelation"),
+    "word_bigram_surprisal" -> Seq("bigramSurprisal"))
+
+  /** The schedule rows whose wave ends at `sorted(i)`. */
+  def releasesAfter(sorted: Seq[String], i: Int): Seq[(String, Seq[String])] =
+    releaseSchedule.filter { case (prefix, _) =>
+      sorted(i).startsWith(prefix) &&
+        sorted.lift(i + 1).forall(!_.startsWith(prefix))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(Session.cpus)
@@ -66,72 +117,6 @@ object Bench {
         "first-query timing will include JIT/codegen cost")
     }
 
-    // Family cache boundaries: these cached relations are consumed ONLY
-    // inside their name-prefix wave of the sorted walk, so once the walk
-    // leaves the prefix they have no future reader this run — release them
-    // (the r15 finding: resident hanf register levels displaced
-    // pagerank_links' warm state, 2.6 → 5.6 s in-suite, with zero code
-    // change). The release runs OUTSIDE any query's timed window.
-    //
-    // Round 19 extends the two original boundaries to the whole session
-    // registry (the round-18 verdict's item 2: new caches — insGateCand,
-    // knnBrute, the shared MinHash signatures, the span-doubling levels —
-    // stayed resident for the remaining walk and the 8 GB heap paid for
-    // them). Each prefix's release list names ONLY caches whose last
-    // consumer sorts inside that prefix wave (consumer map in
-    // OPTIMIZATION_r19.md); a wrongly-released cache would silently
-    // rebuild inside a later query's timed window, so additions here must
-    // re-verify the map.
-    val familyBoundaries: Seq[(String, SparkSession => Int)] = {
-      import graft.queries.{Util => QU}
-      Seq(
-        "ann_graph_" -> ((sp: SparkSession) =>
-          graft.queries.SimilarityOps.releaseServeGraphCaches(sp)),
-        // the batch insert gate is the candidate pool's only consumer
-        "ann_insert_gate" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "insGateCand")),
-        "bloom_fpr_sweep" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "bloomSweep")),
-        // rankValCounts/BySrc feed only the two cms_rank_* audits
-        "cms_rank_" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "rankValCounts")),
-        "coverage_" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "covDocGram")),
-        // the increment chain's token/map caches end with dup_span_incremental
-        "dup_" -> ((sp: SparkSession) => QU.releaseFamily(sp, "dupDblInc")),
-        "dsir_" -> ((sp: SparkSession) => QU.releaseFamily(sp, "dsirOcc")),
-        "epoch_" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "epochSlices")),
-        "graph_" -> ((sp: SparkSession) =>
-          graft.queries.GraphOps.releaseHanfCaches(sp)),
-        // full + sampled signature relations and the recall-audit bands:
-        // last consumers are minhash_band_sweep / minhash_estimate_audit
-        "minhash_" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "minhashSigs", "recallAudit")),
-        "pagerank_links" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "pagerankEdges")),
-        // the PQ codebooks and the IVF serve index end with pq_residual_gain
-        "pq_" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "pqEncoded", "pqResidualEncoded",
-            "ivfServeAssigned")),
-        // knFrame/selfFrame span ccnet→rho_excess_select (LmOps)
-        "rho_excess_select" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "knPplFrame", "knTrainCounts")),
-        "semdedup_" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "semanticDedupAssigned")),
-        // last embedding-family consumer in the sorted walk
-        "sq8_" -> ((sp: SparkSession) =>
-          graft.queries.SimilarityOps.releaseBase(sp) +
-            QU.releaseFamily(sp, "knnBrute")),
-        // span-doubling levels + apply segments end with substring_dedup_*
-        "substring_" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "dupDbl", "dupApply")),
-        "tfidf_topk" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "tfRelation")),
-        "word_bigram_surprisal" -> ((sp: SparkSession) =>
-          QU.releaseFamily(sp, "bigramSurprisal")))
-    }
-
     // A failed query is reported as NEGATIVE elapsed seconds (not a normal
     // measurement) and forces a nonzero exit, so breakage can't masquerade
     // as a fast run.
@@ -146,6 +131,7 @@ object Bench {
     }
     val sortedQs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    val sortedNames = sortedQs.map(_._1)
     val results = sortedQs.zipWithIndex.map { case ((name, fn), i) =>
       val t0 = System.nanoTime()
       val ok =
@@ -154,14 +140,10 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
         }
       val secs = (System.nanoTime() - t0) / 1e9
-      familyBoundaries.foreach { case (prefix, release) =>
-        val leaving = name.startsWith(prefix) &&
-          sortedQs.lift(i + 1).forall(!_._1.startsWith(prefix))
-        if (leaving) {
-          val n = release(spark)
-          System.err.println(s"[bench] family boundary after $name: " +
-            s"released $n '$prefix' cached relations")
-        }
+      releasesAfter(sortedNames, i).foreach { case (prefix, caches) =>
+        val n = graft.queries.Util.releaseFamily(spark, caches: _*)
+        System.err.println(s"[bench] family boundary after $name: " +
+          s"released $n '$prefix' cached relations")
       }
       name -> (if (ok) secs else -secs)
     }

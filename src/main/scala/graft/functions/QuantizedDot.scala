@@ -91,17 +91,35 @@ object GraftFunctions {
     "canon_norm" -> (exprs => CanonNorm(exprs.head)))
 
   /** Sessions whose registration is complete (weak so a stopped session
-    * can be collected, like [[graft.queries.Util]]'s drop-logger set). */
+    * can be collected). */
   private val registered = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** Logs each nonzero `graft_drop_*` observation of a finished action. */
+  private object DropLogger
+      extends org.apache.spark.sql.util.QueryExecutionListener {
+    override def onSuccess(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution,
+        durationNs: Long): Unit =
+      qe.observedMetrics.foreach { case (metricName, row) =>
+        if (metricName.startsWith("graft_drop_") &&
+            row.toSeq.exists { case l: Long => l != 0L; case _ => false })
+          System.err.println(s"[graft] $metricName dropped hot keys: $row")
+      }
+    override def onFailure(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution,
+        exception: Exception): Unit = ()
+  }
 
   /** Install the engine into an already-built session, once: the
     * functions above become callable from SQL, [[RewriteSizeOfIntersect]]
     * and [[RewriteCanonNorm]] join the optimizer and
     * [[graft.plans.AsOfJoinStrategy]] the planner (the public `experimental`
-    * hooks need no SparkSessionExtensions rebuild). The lock covers threads
-    * sharing one session, and a session is marked only once all of it is
-    * installed, so no caller sees it half-registered. */
+    * hooks need no SparkSessionExtensions rebuild), and [[DropLogger]]
+    * logs every nonzero `graft_drop_*` observation
+    * ([[graft.queries.Util.withDropMetric]]) after each action. The lock
+    * covers threads sharing one session, and a session is marked only once
+    * all of it is installed, so no caller sees it half-registered. */
   def register(spark: SparkSession): Unit = registered.synchronized {
     if (!registered.contains(spark)) {
       registry.foreach { case (name, builder) =>
@@ -114,6 +132,7 @@ object GraftFunctions {
           .filterNot(exp.extraOptimizations.contains)
       if (!exp.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
         exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
+      spark.listenerManager.register(DropLogger)
       registered.add(spark)
     }
   }

@@ -844,16 +844,6 @@ object CurationOps {
   /** Greedy coverage-selection rounds. */
   val covK = 8
 
-  /** Unpersist a localCheckpoint'd generation (the wpTrained/bpeTrained
-    * release discipline — checkpoints otherwise accumulate for the
-    * session's lifetime). */
-  private def releaseGen(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Doc → distinct word-trigram incidence (doc_id, g) — the coverage
     * universe. NULL doc_ids are excluded (a selection must name its
     * picks); duplicate doc_ids merge into one candidate (their gram
@@ -982,7 +972,7 @@ object CurationOps {
             .select(col("n_cand"), col("m2.doc_id"), col("m2.gain"),
               col("m2.n_new"), col("bound"), col("nskip"))
             .collect().head
-      if (r0.getLong(0) == 0L) { releaseGen(gains); done = true }
+      if (r0.getLong(0) == 0L) { Util.unpersistDeep(gains); done = true }
       else {
         val id = r0.getLong(1)
         val gain = r0.getLong(2)
@@ -994,12 +984,12 @@ object CurationOps {
         rows += ((round.toLong, id, gain, r0.getLong(3), cum,
           1000L * cum / total, bound, nSkip))
         selected += id
-        if (prevGains != null) releaseGen(prevGains)
+        if (prevGains != null) Util.unpersistDeep(prevGains)
         prevGains = gains
         round += 1
       }
     }
-    if (prevGains != null) releaseGen(prevGains)
+    if (prevGains != null) Util.unpersistDeep(prevGains)
     rows.toSeq
       .toDF("round", "doc_id", "gain_df", "n_new_grams", "cum_df",
         "coverage_milli", "bound_df", "n_skippable")

@@ -648,59 +648,12 @@ object DedupOps {
     * bucket-cap knob) exactly like [[ccEdges]]: [[connectedComponents]] and
     * [[softDedupWeights]] both need the full iterative fixpoint, so one
     * session pays the label-propagation loop ONCE and each consumer layers
-    * its own windows on the checkpointed result. */
-  private val ccLabelCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Int), DataFrame]
-
-  /** Unpersist + drop this session's CC label/edge caches — the
-    * [[Util.releaseCaches]] ladder's hook into this file's registries.
-    * These entries are localCheckpoint'd frames, and `Dataset.unpersist`
-    * only clears CacheManager entries — checkpoint blocks are RDD-level
-    * persists (the ccFixpointLoop comment's distinction), so the blocks
-    * are freed by walking the plan's LogicalRDD exactly like the loop's
-    * own per-generation release. A released checkpoint has no lineage to
-    * recompute from: callers must not hold result frames across the
-    * ladder (the ladder's contract — the next query rebuilds fresh). */
-  private[queries] def releaseCcCaches(s: SparkSession): Unit =
-    ccComputeLock.synchronized {
-      Seq(ccLabelCache, ccEdgeCache, ccBaseLabelCache).foreach(
-        _.filterInPlace { case (k, df) =>
-          if (k._1 eq s) {
-            df.unpersist()
-            df.queryExecution.analyzed.foreach {
-              case r: org.apache.spark.sql.execution.LogicalRDD =>
-                r.rdd.unpersist(blocking = false)
-              case _ => ()
-            }
-            false
-          } else true
-        })
-    }
-  /** Guards the two caches below whose miss path RUNS SPARK JOBS (the CC
-    * fixpoint / edge checkpoint): without it, two concurrent first callers
-    * would both pay the full compute and leak one checkpoint's blocks until
-    * the ContextCleaner collects them. synchronized is reentrant, so
-    * ccLabels → ccEdges nesting under the one lock is fine; the lazy-persist
-    * caches ([[Util.cachedRelation]], lshCache) stay lock-free because their
-    * miss path only CONSTRUCTS a plan — a double build there is a no-op race.
-    * Staleness contract (both caches): entries are keyed on (session, dir,
-    * cap); if the DATA under dir is regenerated mid-session the cached
-    * relation is stale by design — same contract as Spark's own table cache
-    * over external files. The driver starts a fresh session per round, so
-    * regeneration between rounds never hits a warm cache. */
-  private val ccComputeLock = new Object
+    * its own windows on the checkpointed result. The miss path runs Spark
+    * jobs; [[Util.cached]] pays it once however many callers race, and
+    * its ccEdges fetch nests under its own key. */
   private def ccLabels(s: SparkSession, dir: String): DataFrame =
-    ccComputeLock.synchronized {
-      ccLabelCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      val key = (s, dir, maxCcBucket(s))
-      ccLabelCache.getOrElseUpdate(key, {
-        ccLabelCache.keys
-          .filter(k => k._1 == s && k._2 == dir && k != key)
-          .foreach(ccLabelCache.remove)
-        ccLabelsUncached(s, dir)
-      })
-    }
+    Util.cached(s, dir, "ccLabels", maxCcBucket(s).toString)(
+      ccLabelsUncached(s, dir))
   private def ccLabelsUncached(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(inSample)
     // session-cached checkpoint; bl released inside ccEdges
@@ -719,18 +672,10 @@ object DedupOps {
     val edges = edges0.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(edges0.select(col("b_id").as("src"), col("a_id").as("dst")))
       .localCheckpoint() // iterations re-join this directed form
-    // localCheckpoint blocks are persistent RDDs, not CacheManager entries;
-    // each checkpointed frame's analyzed plan is the LogicalRDD holding
-    // exactly that RDD, so intermediates are released directly (no
-    // getPersistentRDDs diffing, which could race a concurrent query).
-    // Only the final labels generation stays pinned — the returned frame
-    // reads it, and the ContextCleaner frees it once unreferenced.
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case r: org.apache.spark.sql.execution.LogicalRDD =>
-          r.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+    // intermediates are released by Util.unpersistDeep as soon as they are
+    // superseded (no getPersistentRDDs diffing, which could race a
+    // concurrent query). Only the final labels generation stays pinned —
+    // the returned frame reads it.
     var labels = nodes.select(col("node"), col("node").as("label"))
       .localCheckpoint()
     // coalesce: sum over zero rows is null (empty node set must return an
@@ -758,13 +703,13 @@ object DedupOps {
         .localCheckpoint()
       // the new checkpoint is materialized and lineage-free: the previous
       // generation's blocks are dead weight — free them immediately
-      release(labels)
+      Util.unpersistDeep(labels)
       labels = next
       prevSum = curSum
       curSum = labelSum(labels)
       iter += 1
     }
-    release(edges) // iterations done; only the final labels stay pinned
+    Util.unpersistDeep(edges) // done; only the final labels stay pinned
     // fail loudly rather than emit wrong components: the oracle computes
     // the exact closure, and a silent cap would diverge invisibly
     if (curSum != prevSum)
@@ -856,26 +801,13 @@ object DedupOps {
   /** Checkpointed CC edge relation (a_id, b_id), cached per (session, dir,
     * bucket-cap knob) — [[connectedComponents]] and [[crossSourceLeakage]]
     * both consume it, so one bench/driver session pays edge discovery ONCE.
-    * localCheckpoint blocks are persistent RDDs (not CacheManager entries);
-    * evicted keys are dropped and the ContextCleaner reclaims their blocks
-    * once unreferenced — same lifecycle as every checkpoint in the CC
-    * iteration loop. */
-  private val ccEdgeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Int), DataFrame]
+    * The band relation is released once the edges materialize. */
   private def ccEdges(s: SparkSession, dir: String): DataFrame =
-    ccComputeLock.synchronized {
-      ccEdgeCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      val key = (s, dir, maxCcBucket(s))
-      ccEdgeCache.getOrElseUpdate(key, {
-        ccEdgeCache.keys
-          .filter(k => k._1 == s && k._2 == dir && k != key)
-          .foreach(ccEdgeCache.remove)
-        val (bl, edges0) = ccEdgeDiscovery(s, dir)
-        val edges = edges0.localCheckpoint()
-        bl.unpersist()
-        edges
-      })
+    Util.cached(s, dir, "ccEdges", maxCcBucket(s).toString) {
+      val (bl, edges0) = ccEdgeDiscovery(s, dir)
+      val edges = edges0.localCheckpoint()
+      bl.unpersist()
+      edges
     }
 
   private def crossSourceLeakage(s: SparkSession, dir: String): DataFrame = {
@@ -1120,23 +1052,13 @@ object DedupOps {
     * the state a continuously-ingesting deployment would already HOLD from
     * the previous run, so the incremental query pays it at most once per
     * session and each subsequent increment pays only the merge. */
-  private val ccBaseLabelCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Int), DataFrame]
   private def ccBaseLabels(s: SparkSession, dir: String): DataFrame =
-    ccComputeLock.synchronized {
-      ccBaseLabelCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      val key = (s, dir, maxCcBucket(s))
-      ccBaseLabelCache.getOrElseUpdate(key, {
-        ccBaseLabelCache.keys
-          .filter(k => k._1 == s && k._2 == dir && k != key)
-          .foreach(ccBaseLabelCache.remove)
-        val baseDocs = t(s, dir, "documents")
-          .filter(inSample && col("doc_id") % 50 =!= 0)
-        val baseEdges = ccEdges(s, dir)
-          .filter(col("a_id") % 50 =!= 0 && col("b_id") % 50 =!= 0)
-        ccFixpointLoop(baseDocs.select(col("doc_id").as("node")), baseEdges)
-      })
+    Util.cached(s, dir, "ccBaseLabels", maxCcBucket(s).toString) {
+      val baseDocs = t(s, dir, "documents")
+        .filter(inSample && col("doc_id") % 50 =!= 0)
+      val baseEdges = ccEdges(s, dir)
+        .filter(col("a_id") % 50 =!= 0 && col("b_id") % 50 =!= 0)
+      ccFixpointLoop(baseDocs.select(col("doc_id").as("node")), baseEdges)
     }
 
   /** Incremental connected-components maintenance — the last batch-only

@@ -130,44 +130,9 @@ object GraphOps {
     * the `graft_drop_basket` CollectMetrics node must be the SAME plan
     * everywhere it appears in a query, or Spark rejects the duplicate
     * metric name (self-joins of one instance are allowed; two structurally
-    * equal but separately-built instances are not). Lazy persist, same
-    * lifecycle discipline as the lshCache family. */
-  private val itemsCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Int), DataFrame]
-
-  /** Unpersist + drop this session's HyperANF register family — the
-    * cached propagation levels (`hanfRegs1..hanfMaxRounds`) and their
-    * packed-array twins (`hanfPacked*`). These are the largest
-    * session-cached relations the graph tier builds (|V|·m rows per
-    * level, MEMORY_AND_DISK), shared by the audit, the packed variant,
-    * the effective-diameter run, and harmonic centrality — and consumed
-    * by NOTHING else, so once the graph wave is done they are pure
-    * displacement pressure on every later query's warm state (the r15
-    * measured effect on pagerank_links). `hanfEdges` is deliberately
-    * kept: it is edge-list-sized and cheap to rebuild, but leaving it
-    * makes an accidental re-entry into the family cheap too. Correctness
-    * is untouched — the next hanf consumer rebuilds levels lazily. */
-  def releaseHanfCaches(s: SparkSession): Int =
-    Util.releaseFamily(s, "hanfRegs", "hanfPacked", "hanfSwar")
-
-  /** Unpersist + drop this session's basket/pair caches — the
-    * [[Util.releaseCaches]] ladder's hook into this file's registries. */
-  private[queries] def releaseGraphCaches(s: SparkSession): Unit = {
-    itemsCache.filterInPlace { case (k, df) =>
-      if (k._1 eq s) { df.unpersist(); false } else true
-    }
-    pairCache.filterInPlace { case (k, df) =>
-      if (k._1 eq s) { df.unpersist(); false } else true
-    }
-  }
-  private def cappedItems(s: SparkSession, dir: String): DataFrame = {
-    itemsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val key = (s, dir, maxBasket(s))
-    itemsCache.getOrElseUpdate(key, {
-      itemsCache.keys
-        .filter(k => k._1 == s && k._2 == dir && k != key)
-        .foreach(k => itemsCache.remove(k).foreach(_.unpersist()))
+    * equal but separately-built instances are not). */
+  private def cappedItems(s: SparkSession, dir: String): DataFrame =
+    Util.cachedRelation(s, dir, "basketItems", maxBasket(s).toString) {
       val items = t(s, dir, "lineitem")
         // an item with no order or no part can't co-occur; dropped
         // EXPLICITLY on both sides (fuzz gate: the Spark semi-join below
@@ -181,9 +146,8 @@ object GraphOps {
           sum(when(col("b") > maxBasket(s), 1L).otherwise(0L)))
         .filter(col("b") <= maxBasket(s))
         .select("o")
-      items.join(okOrders, Seq("o"), "left_semi").persist()
-    })
-  }
+      items.join(okOrders, Seq("o"), "left_semi")
+    }
 
   private val cappedItemsSql =
     """items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
@@ -192,29 +156,17 @@ object GraphOps {
   /** Support-thresholded co-order pair relation (pa, pb, n_co), the
     * expensive shared stage of all three market-basket queries (pair
     * expansion is the o-keyed self-join — the dominant cost; everything
-    * after it is key-count-sized). Cached per (session, dir, knobs) with
-    * a LAZY persist, the [[SimilarityOps]] lshCache pattern: no job runs
-    * at construction, the first action materializes for every later
-    * consumer, stopped sessions are evicted. */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Int, Int), DataFrame]
-  private def supportPairs(s: SparkSession, dir: String): DataFrame = {
-    pairCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val key = (s, dir, maxBasket(s), minSupport(s))
-    pairCache.getOrElseUpdate(key, {
-      pairCache.keys
-        .filter(k => k._1 == s && k._2 == dir && k != key)
-        .foreach(k => pairCache.remove(k).foreach(_.unpersist()))
+    * after it is key-count-sized). Cached per (session, dir, knobs). */
+  private def supportPairs(s: SparkSession, dir: String): DataFrame =
+    Util.cachedRelation(s, dir, "basketPairs",
+        s"${maxBasket(s)}_${minSupport(s)}") {
       val items = cappedItems(s, dir)
       val a = items.as("a"); val b = items.as("b")
       a.join(b, col("a.o") === col("b.o") && col("a.p") < col("b.p"))
         .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
         .agg(count(lit(1)).as("n_co"))
         .filter(col("n_co") >= minSupport(s))
-        .persist()
-    })
-  }
+    }
 
   private val supportPairsSql =
     s"""pairs AS (

@@ -178,56 +178,10 @@ object SimilarityOps {
     * five similarity queries share this base, and within one query the
     * LSH/IVF plans reference it up to three times — caching turns those
     * re-scans + re-quantizations into memory reads. Transparent to results.
-    *
-    * The persist is LAZY: no Spark job runs at query-construction time, so
-    * schema/explain-only callers stay job-free; the first action populates
+    * Lazy like every [[Util.cachedRelation]]: the first action populates
     * the cache for every later consumer. */
-  private val baseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist + drop this session's quantized-base and LSH-state
-    * entries — the [[Util.releaseCaches]] ladder's hook into this
-    * file's registries. */
-  /** Unpersist + drop this session's quantized base and LSH band caches.
-    * Public and counting since round 19: Bench's family boundary after
-    * the last embedding-family consumer (`sq8_recall_audit` in a sorted
-    * walk) calls this, mirroring [[releaseServeGraphCaches]]. */
-  def releaseBase(s: SparkSession): Int = {
-    var released = 0
-    baseCache.filterInPlace { case (k, df) =>
-      if (k._1 eq s) { df.unpersist(); released += 1; false } else true
-    }
-    lshCache.filterInPlace { case (k, dfs) =>
-      if (k._1 eq s) { dfs.foreach(_.unpersist()); released += 1; false }
-      else true
-    }
-    released
-  }
-  /** Unpersist + drop this session's graph-serve caches — the greedy/beam
-    * serve graph (`greedyGraph`), its shared hop-1 candidate pool
-    * (`graphHop1`), the `hnsw*`-prefixed cached relations, and the
-    * checkpointed built graphs (`hnswGraph`/`hnswLayerOne` in
-    * `hnswCkptCache`). All are consumed ONLY by the `ann_graph_*`
-    * wave, so after its last query they are displacement pressure with no
-    * future reader — the same finding as
-    * [[graft.queries.GraphOps.releaseHanfCaches]], on the serve side. The
-    * quantized base is deliberately NOT released: kmeans/knn/pq/ivf
-    * consumers run later in any sorted walk. */
-  def releaseServeGraphCaches(s: SparkSession): Int = {
-    var ckpts = 0
-    hnswCkptLock.synchronized {
-      hnswCkptCache.filterInPlace { case (k, df) =>
-        if (k._1 eq s) { unpersistCkpt(df); ckpts += 1; false } else true
-      }
-    }
-    Util.releaseFamily(s, "greedyGraph", "graphHop1", "hnsw") + ckpts
-  }
-
-  private[queries] def quantizedBase(s: SparkSession, dir: String): DataFrame = {
-    // evict entries whose session is gone so the map can't pin stopped
-    // sessions (and their cached blocks) for the JVM lifetime
-    baseCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    baseCache.getOrElseUpdate((s, dir), {
+  private[queries] def quantizedBase(s: SparkSession, dir: String): DataFrame =
+    Util.cachedRelation(s, dir, "quantizedBase", "") {
       t(s, dir, "embeddings")
         .select(col("vec_id"), qvec(col("embedding")).as("q"))
         .withColumn("nrm",
@@ -240,9 +194,7 @@ object SimilarityOps {
         // of an empty array emits no rows), so bucket 0 candidate sets
         // diverged; IVF additionally hit DIVIDE_BY_ZERO on the zero norm.
         .filter(col("nrm") > 0)
-        .persist()
-    })
-  }
+    }
 
   /** Brute-force cosine top-10 for query vectors (vec_id < 5) against the
     * whole corpus. Session-cached: TWELVE call sites across the ANN/graph
@@ -434,38 +386,23 @@ object SimilarityOps {
     * aggregate per (vec, bit) — which stays inside WholeStageCodegen,
     * instead of 16 interpreted higher-order `aggregate` lambdas per row
     * (measured ~6× faster at sf0.1). */
-  /** Keyed by (session, dir, resolved bits): a `graft.lsh.bits` retune in
-    * the same session must produce a fresh plan, not the memoized one. */
-  /** Keyed by (session, dir, resolved bits, resolved cap): retuning EITHER
-    * knob in-session must produce a fresh plan, never the memoized one.
+  /** Cached per (session, dir, resolved bits, resolved cap): retuning
+    * EITHER knob in-session builds a fresh plan and releases the old one.
     * The value carries every persisted DataFrame the plan owns (result +
-    * the bands intermediate) so a superseded entry for the same
-    * (session, dir) is fully unpersisted on replacement instead of
-    * leaking block-manager storage across retunes. */
-  private val lshCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), Seq[DataFrame]]
-  /** Cached per (session, dir, knobs): `dedup_embedding_neardup` is a
-    * filter over this exact result, so materializing it once (it is
-    * candidate-pair sized — thousands of rows, not corpus-sized) halves
-    * the similarity suite's wall time. Transparent to results.
+    * the bands intermediate). `dedup_embedding_neardup` is a filter over
+    * this exact result, so materializing it once (it is candidate-pair
+    * sized — thousands of rows, not corpus-sized) halves the similarity
+    * suite's wall time. Transparent to results.
     *
     * The persist is LAZY (no count() at construction): schema/explain-only
     * callers trigger no Spark job, and bench timing attributes the first
     * materialization to the query that actually runs first — noted next to
     * the bench results. */
-  private def lshState(s: SparkSession, dir: String): Seq[DataFrame] = {
-    lshCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val key = (s, dir, lshBitsFor(s, dir), maxLshBucket(s))
-    lshCache.getOrElseUpdate(key, {
-      // evict + unpersist entries for the same (session, dir) under OLD
-      // knob values before building the new plan
-      lshCache.keys
-        .filter(k => k._1 == s && k._2 == dir && k != key)
-        .foreach(k => lshCache.remove(k).foreach(_.foreach(_.unpersist())))
+  private def lshState(s: SparkSession, dir: String): Seq[DataFrame] =
+    Util.cached(s, dir, "lshState", s"${lshBitsFor(s, dir)}_${maxLshBucket(s)}") {
       val (result, bands) = annLshCosineUncached(s, dir)
       Seq(result.persist(), bands)
-    })
-  }
+    }
 
   private def annLshCosine(s: SparkSession, dir: String): DataFrame =
     lshState(s, dir).head
@@ -995,10 +932,6 @@ object SimilarityOps {
     * count); results are session-cached so Verify/bench pay the loop
     * once. */
   private val kmeansTrainRoundsK = 4
-  private val kmeansTrainCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String),
-      Seq[(Long, Long, Long, Option[Long])]]
-  private val kmeansTrainLock = new Object
 
   /** The ad-hoc (build-rule) seed set — `kmeans_train_rounds`' seed. */
   private def adhocSeed(s: SparkSession, dir: String): DataFrame =
@@ -1015,8 +948,8 @@ object SimilarityOps {
 
   /** [[kmeansTrainRoundsK]] Lloyd rounds from arbitrary seed sets — per
     * arm, per round (round, inertia, n_active, n_moved). Results are
-    * cached per (session, dir, armKey) so Verify/bench pay each arm's
-    * loop once.
+    * cached per (session, dir, armKey) as `kmeansTrain:<arm>` so
+    * Verify/bench pay each arm's loop once.
     *
     * Uncached arms run FUSED (the round-16 verdict's loop fusion): seed
     * sets union under an `arm` tag, assignment ranks per (arm, vec_id),
@@ -1030,138 +963,140 @@ object SimilarityOps {
     * equal the sequential loop's bit-for-bit. */
   private def lloydRows(s: SparkSession, dir: String,
       arms: Seq[(String, () => DataFrame)])
-      : Map[String, Seq[(Long, Long, Long, Option[Long])]] =
-    kmeansTrainLock.synchronized {
-    kmeansTrainCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val missing = arms.filterNot(a => kmeansTrainCache.contains((s, dir, a._1)))
-    if (missing.nonEmpty) {
-      import org.apache.spark.sql.expressions.Window
-      def release(df: DataFrame): Unit =
-        df.queryExecution.analyzed.foreach {
-          case r: org.apache.spark.sql.execution.LogicalRDD =>
-            r.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
-      val e = quantizedBase(s, dir)
-      // argmax as ONE map-side-combining hash aggregate (max_by over the
-      // (ccos, −cent_id) order — identical row to the former
-      // row_number()=1 window: cent_id is unique within a (arm, vec_id)
-      // group so the order is total, and ccos is never NULL/NaN on the
-      // nrm>0 base), replacing Exchange+Sort+Window: the partial
-      // aggregate combines the K scored rows per vector BEFORE the
-      // shuffle, so K× fewer bytes cross the wire and no sort runs —
-      // guide §2.3/§2.4 (measured in-suite: see OPTIMIZATION_r18.md).
-      def assign(cents: DataFrame): DataFrame =
-        e.crossJoin(broadcast(cents))
-          .withColumn("dot", dotQ(col("q"), col("cq")))
-          .withColumn("ccos", col("dot").cast("double") /
-            sqrt((col("nrm") * col("cn")).cast("double")))
-          .groupBy(col("arm"), col("vec_id"))
-          .agg(max_by(
-            struct(col("cent_id"), col("q"), col("nrm"), col("dot"),
-              col("cn")),
-            struct(col("ccos"), (-col("cent_id")).as("nid"))).as("m"))
-          .select(col("arm"), col("vec_id"), col("m.cent_id"), col("m.q"),
-            col("m.nrm"), col("m.dot"), col("m.cn"))
-      var cents = missing
-        .map { case (key, mk) => mk().withColumn("arm", lit(key)) }
-        .reduce(_.unionByName(_))
-      var prevCents: DataFrame = null
-      var prevAssign: DataFrame = null
-      val out = missing.map { case (key, _) =>
-        key -> scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Option[Long])]
-      }.toMap
-      for (r <- 1 to kmeansTrainRoundsK) {
-        // each round's assignment is persisted: it feeds the metric
-        // aggregate, the NEXT round's moved-count join AND (twice) the
-        // centroid update — uncached, every consumer re-ran the
-        // crossJoin+argmax, i.e. ~4 corpus passes per round instead of 1
-        // (the kppCents recompute trap, assignment-sized; measured in
-        // ProfileQ as the Lloyd loop's dominant job count). Superseded
-        // generations unpersist as soon as their last reader (the next
-        // round's metric collect) is done.
-        val a = assign(cents).persist()
-        // moved-count rides the SAME aggregate as the metrics (one
-        // driver action per round, not two): every vector is assigned
-        // every round, so the inner join against the previous round's
-        // assignment keeps all rows and the joined relation's inertia
-        // equals the unjoined one
-        val am = if (prevAssign == null) a.withColumn("pc", col("cent_id"))
-          else a.join(prevAssign.select(col("arm"), col("vec_id"),
-            col("cent_id").as("pc")), Seq("arm", "vec_id"))
-        // groupBy(arm) drops arms whose assignment is empty (degenerate
-        // corpora) — the map default keeps the sequential loop's
-        // (0, 0, 0) row for them
-        val st = am.groupBy(col("arm")).agg(
-          coalesce(sum(col("nrm") - lit(2L) * col("dot") + col("cn")), lit(0L))
-            .as("inertia"),
-          countDistinct(col("cent_id")).as("n_active"),
-          sum(when(col("cent_id") =!= col("pc"), 1L).otherwise(0L))
-            .as("n_moved")).collect()
-          .map(x => x.getString(0) -> ((x.getLong(1), x.getLong(2),
-            x.getLong(3)))).toMap
-          .withDefaultValue((0L, 0L, 0L))
-        missing.foreach { case (key, _) =>
-          out(key) += ((r.toLong, st(key)._1, st(key)._2,
-            if (prevAssign == null) None else Some(st(key)._3)))
-        }
-        // the metric collect above was the previous assignment's last
-        // reader (the centroid update below reads only this round's)
-        if (prevAssign != null) prevAssign.unpersist(blocking = false)
-        prevAssign = a
-        // the LAST round's metrics are already recorded — its centroid
-        // update would never be read, and it costs a full corpus-scale
-        // aggregate + an eager checkpoint job (review finding: the SQL
-        // oracle correctly generates only K−1 update rounds)
-        if (r < kmeansTrainRoundsK) {
-          // n_members still rides the SAME per-(arm, cent, d) aggregate
-          // as the dimension sums (no separate count pass — the round-18
-          // fusion), but the DIVISOR is the per-CENTROID member count,
-          // not the per-dimension row count: on a dirty corpus with
-          // ragged embedding arrays a dimension absent from some member
-          // made count(*) within (arm, cent_id, d) smaller than the
-          // member count, silently shifting that dimension's mean — the
-          // round-19 fuzz gate caught rounds 2..4 of both trainer
-          // queries diverging from the oracle (which divides every
-          // dimension by the member count, as the pre-fusion code did).
-          // Every member has dimension 0 (the nrm > 0 base excludes
-          // empty vectors), so the d = 0 group's count IS the member
-          // count, read in the pack aggregate and applied to every
-          // dimension.
-          val newC = a
-            .select(col("arm"), col("cent_id"),
-              posexplode(col("q")).as(Seq("d", "x")))
-            .groupBy("arm", "cent_id", "d").agg(sum(col("x")).as("sx"),
-              count(lit(1)).as("cnt"))
-            .groupBy("arm", "cent_id").agg(
-              max(when(col("d") === 0, col("cnt"))).as("n_members"),
-              array_sort(collect_list(struct(col("d"), col("sx"))))
-                .as("ws"))
-            .select(col("arm"), col("cent_id"), expr(
-              "transform(ws, w -> CAST(floor(1.0 * w.sx / n_members)" +
-                " AS BIGINT))").as("nq"))
-            .withColumn("nn", graft.functions.GraftFunctions
-              .quantized_dot(col("nq"), col("nq")))
-          val merged = cents
-            .join(newC, Seq("arm", "cent_id"), "left")
-            .select(col("arm"), col("cent_id"),
-              coalesce(col("nq"), col("cq")).as("cq"),
-              coalesce(col("nn"), col("cn")).as("cn"))
-          if (prevCents != null) release(prevCents)
-          prevCents = cents
-          cents = merged.localCheckpoint() // |arms|·8 rows, eager
-        }
+      : Map[String, Seq[(Long, Long, Long, Option[Long])]] = {
+    def name(arm: String) = s"kmeansTrain:$arm"
+    val resident = Util.cacheStats(s)
+      .filter(c => c.dir == dir && c.resident).map(_.name).toSet
+    // every arm not yet cached runs in ONE fused loop, built by the first
+    // such arm's registry entry and read by the others'
+    val missing = arms.filterNot(a => resident(name(a._1)))
+    lazy val fused = lloydFused(s, dir, missing)
+    arms.map { case (arm, seed) =>
+      arm -> Util.cached(s, dir, name(arm), "")(
+        if (missing.exists(_._1 == arm)) fused(arm)
+        else lloydFused(s, dir, Seq(arm -> seed))(arm))
+    }.toMap
+  }
+
+  private def lloydFused(s: SparkSession, dir: String,
+      missing: Seq[(String, () => DataFrame)])
+      : Map[String, Seq[(Long, Long, Long, Option[Long])]] = {
+    val e = quantizedBase(s, dir)
+    // argmax as ONE map-side-combining hash aggregate (max_by over the
+    // (ccos, −cent_id) order — identical row to the former
+    // row_number()=1 window: cent_id is unique within a (arm, vec_id)
+    // group so the order is total, and ccos is never NULL/NaN on the
+    // nrm>0 base), replacing Exchange+Sort+Window: the partial
+    // aggregate combines the K scored rows per vector BEFORE the
+    // shuffle, so K× fewer bytes cross the wire and no sort runs —
+    // guide §2.3/§2.4 (measured in-suite: see OPTIMIZATION_r18.md).
+    def assign(cents: DataFrame): DataFrame =
+      e.crossJoin(broadcast(cents))
+        .withColumn("dot", dotQ(col("q"), col("cq")))
+        .withColumn("ccos", col("dot").cast("double") /
+          sqrt((col("nrm") * col("cn")).cast("double")))
+        .groupBy(col("arm"), col("vec_id"))
+        .agg(max_by(
+          struct(col("cent_id"), col("q"), col("nrm"), col("dot"),
+            col("cn")),
+          struct(col("ccos"), (-col("cent_id")).as("nid"))).as("m"))
+        .select(col("arm"), col("vec_id"), col("m.cent_id"), col("m.q"),
+          col("m.nrm"), col("m.dot"), col("m.cn"))
+    var cents = missing
+      .map { case (key, mk) => mk().withColumn("arm", lit(key)) }
+      .reduce(_.unionByName(_))
+    var prevCents: DataFrame = null
+    var prevAssign: DataFrame = null
+    val out = missing.map { case (key, _) =>
+      key -> scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Long, Option[Long])]
+    }.toMap
+    for (r <- 1 to kmeansTrainRoundsK) {
+      // each round's assignment is persisted: it feeds the metric
+      // aggregate, the NEXT round's moved-count join AND (twice) the
+      // centroid update — uncached, every consumer re-ran the
+      // crossJoin+argmax, i.e. ~4 corpus passes per round instead of 1
+      // (the kppCents recompute trap, assignment-sized; measured in
+      // ProfileQ as the Lloyd loop's dominant job count). Superseded
+      // generations unpersist as soon as their last reader (the next
+      // round's metric collect) is done.
+      val a = assign(cents).persist()
+      // moved-count rides the SAME aggregate as the metrics (one
+      // driver action per round, not two): every vector is assigned
+      // every round, so the inner join against the previous round's
+      // assignment keeps all rows and the joined relation's inertia
+      // equals the unjoined one
+      val am = if (prevAssign == null) a.withColumn("pc", col("cent_id"))
+        else a.join(prevAssign.select(col("arm"), col("vec_id"),
+          col("cent_id").as("pc")), Seq("arm", "vec_id"))
+      // groupBy(arm) drops arms whose assignment is empty (degenerate
+      // corpora) — the map default keeps the sequential loop's
+      // (0, 0, 0) row for them
+      val st = am.groupBy(col("arm")).agg(
+        coalesce(sum(col("nrm") - lit(2L) * col("dot") + col("cn")), lit(0L))
+          .as("inertia"),
+        countDistinct(col("cent_id")).as("n_active"),
+        sum(when(col("cent_id") =!= col("pc"), 1L).otherwise(0L))
+          .as("n_moved")).collect()
+        .map(x => x.getString(0) -> ((x.getLong(1), x.getLong(2),
+          x.getLong(3)))).toMap
+        .withDefaultValue((0L, 0L, 0L))
+      missing.foreach { case (key, _) =>
+        out(key) += ((r.toLong, st(key)._1, st(key)._2,
+          if (prevAssign == null) None else Some(st(key)._3)))
       }
-      if (prevCents != null) release(prevCents)
-      release(cents)
-      // the final round's assignment has no reader past its metric row
+      // the metric collect above was the previous assignment's last
+      // reader (the centroid update below reads only this round's)
       if (prevAssign != null) prevAssign.unpersist(blocking = false)
-      out.foreach { case (key, buf) =>
-        kmeansTrainCache((s, dir, key)) = buf.toSeq
+      prevAssign = a
+      // the LAST round's metrics are already recorded — its centroid
+      // update would never be read, and it costs a full corpus-scale
+      // aggregate + an eager checkpoint job (review finding: the SQL
+      // oracle correctly generates only K−1 update rounds)
+      if (r < kmeansTrainRoundsK) {
+        // n_members still rides the SAME per-(arm, cent, d) aggregate
+        // as the dimension sums (no separate count pass — the round-18
+        // fusion), but the DIVISOR is the per-CENTROID member count,
+        // not the per-dimension row count: on a dirty corpus with
+        // ragged embedding arrays a dimension absent from some member
+        // made count(*) within (arm, cent_id, d) smaller than the
+        // member count, silently shifting that dimension's mean — the
+        // round-19 fuzz gate caught rounds 2..4 of both trainer
+        // queries diverging from the oracle (which divides every
+        // dimension by the member count, as the pre-fusion code did).
+        // Every member has dimension 0 (the nrm > 0 base excludes
+        // empty vectors), so the d = 0 group's count IS the member
+        // count, read in the pack aggregate and applied to every
+        // dimension.
+        val newC = a
+          .select(col("arm"), col("cent_id"),
+            posexplode(col("q")).as(Seq("d", "x")))
+          .groupBy("arm", "cent_id", "d").agg(sum(col("x")).as("sx"),
+            count(lit(1)).as("cnt"))
+          .groupBy("arm", "cent_id").agg(
+            max(when(col("d") === 0, col("cnt"))).as("n_members"),
+            array_sort(collect_list(struct(col("d"), col("sx"))))
+              .as("ws"))
+          .select(col("arm"), col("cent_id"), expr(
+            "transform(ws, w -> CAST(floor(1.0 * w.sx / n_members)" +
+              " AS BIGINT))").as("nq"))
+          .withColumn("nn", graft.functions.GraftFunctions
+            .quantized_dot(col("nq"), col("nq")))
+        val merged = cents
+          .join(newC, Seq("arm", "cent_id"), "left")
+          .select(col("arm"), col("cent_id"),
+            coalesce(col("nq"), col("cq")).as("cq"),
+            coalesce(col("nn"), col("cn")).as("cn"))
+        if (prevCents != null) Util.unpersistDeep(prevCents)
+        prevCents = cents
+        cents = merged.localCheckpoint() // |arms|·8 rows, eager
       }
     }
-    arms.map(a => a._1 -> kmeansTrainCache((s, dir, a._1))).toMap
+    if (prevCents != null) Util.unpersistDeep(prevCents)
+    Util.unpersistDeep(cents)
+    // the final round's assignment has no reader past its metric row
+    if (prevAssign != null) prevAssign.unpersist(blocking = false)
+    out.map { case (key, buf) => key -> buf.toSeq }
   }
 
   private def kmeansTrainRounds(s: SparkSession, dir: String): DataFrame = {
@@ -2706,7 +2641,7 @@ object SimilarityOps {
       k.select(col("nbr").as("node"), col("node").as("nbr"), col("cos")))
   }
 
-  /** Checkpointed built serve graphs, keyed like the lshCache family.
+  /** Checkpointed built serve graphs, keyed like [[lshState]].
     * The build's logical lineage (LSH pairs → insert-ordered candidate
     * pools → heuristic prune → symmetrize → degree cap) is DEEP, and a
     * greedy walk references its graph at EVERY hop plus both entry-rule
@@ -2716,31 +2651,12 @@ object SimilarityOps {
     * cache-resident). The built graph itself is tiny — |V|·(degree+1)
     * rows — so the ccEdges pattern applies: ONE eager localCheckpoint
     * per session cuts the lineage to a LogicalRDD and every hop plans
-    * against that flat relation. The compute lock is the ccComputeLock
-    * discipline: the miss path runs Spark jobs, so two concurrent first
-    * callers must not both pay the build (and leak one checkpoint). */
-  private val hnswCkptCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, String), DataFrame]
-  private val hnswCkptLock = new Object
+    * against that flat relation. [[Util.cached]] builds each graph once
+    * however many callers race for it. */
   private def hnswCkpt(s: SparkSession, dir: String, name: String)
-      (build: => DataFrame): DataFrame = hnswCkptLock.synchronized {
-    hnswCkptCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val key = (s, dir, name, s"${lshBitsFor(s, dir)}_${maxLshBucket(s)}")
-    hnswCkptCache.getOrElseUpdate(key, {
-      hnswCkptCache.keys
-        .filter(k => k._1 == s && k._2 == dir && k._3 == name && k != key)
-        .foreach(k => hnswCkptCache.remove(k).foreach(unpersistCkpt))
-      build.localCheckpoint()
-    })
-  }
-  private def unpersistCkpt(df: DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  }
+      (build: => DataFrame): DataFrame =
+    Util.cached(s, dir, name, s"${lshBitsFor(s, dir)}_${maxLshBucket(s)}")(
+      build.localCheckpoint())
 
   /** THE checkpointed symmetric built adjacency, stored DISTINCT with an
     * edge multiplicity column: [[hnswSymEdges]] duplicates a row when

@@ -905,89 +905,63 @@ object TextOps {
     * `bpe_compression`: the ordered merge table plus the FINAL per-word
     * symbol state (word, freq, s), session-cached so one session pays the
     * k-round training loop once (the final generation's checkpoint stays
-    * pinned by the cache; intermediates are released per round). Guarded
-    * by a lock for the same reason as the CC caches — the miss path runs
-    * Spark jobs. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (Seq[(Int, String, String, String, Long)], DataFrame)]
-  private val bpeComputeLock = new Object
-
-  /** Unpersist + drop this session's BPE training cache — the
-    * [[Util.releaseCaches]] ladder's hook into this registry. */
-  private[queries] def releaseBpeCache(s: SparkSession): Unit =
-    bpeComputeLock.synchronized {
-      bpeCache.filterInPlace { case (k, (_, df)) =>
-        if (k._1 eq s) { df.unpersist(); false } else true
-      }
-    }
-  /** Package-visible for UnigramOps.tokenizerFertility — the cross-trainer
-    * comparison rides the same cached training state. */
+    * pinned by the cache; intermediates are released per round). */
   private[queries] def bpeFinalState(s: SparkSession, dir: String): DataFrame =
     bpeTrained(s, dir)._2
 
   private def bpeTrained(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, String, Long)], DataFrame) =
-    bpeComputeLock.synchronized {
-      bpeCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      bpeCache.getOrElseUpdate((s, dir), {
-        def release(df: DataFrame): Unit =
-          df.queryExecution.analyzed.foreach {
-            case r: org.apache.spark.sql.execution.LogicalRDD =>
-              r.rdd.unpersist(blocking = false)
-            case _ => ()
-          }
-        var vocab = t(s, dir, "documents")
-          .select(explode(words(col("text"))).as("word"))
-          .where(col("word").rlike("^[a-z]+$") && length(col("word")) >= 2)
-          .groupBy("word").agg(count(lit(1)).as("freq"))
-          .select(col("word"), col("freq"),
-            array_join(expr("regexp_extract_all(word, '.', 0)"), "·").as("s"))
+    Util.cached(s, dir, "bpeTrained", "") {
+      var vocab = t(s, dir, "documents")
+        .select(explode(words(col("text"))).as("word"))
+        .where(col("word").rlike("^[a-z]+$") && length(col("word")) >= 2)
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .select(col("word"), col("freq"),
+          array_join(expr("regexp_extract_all(word, '.', 0)"), "·").as("s"))
+        .localCheckpoint()
+      val merges = scala.collection.mutable.ArrayBuffer
+        .empty[(Int, String, String, String, Long)]
+      var round = 1
+      var exhausted = false
+      while (round <= bpeMergeRoundsK && !exhausted) {
+        val syms = split(col("s"), "·")
+        // top-1 argmax as a 1-row broadcast subquery riding the fold's
+        // checkpoint action — one heavy action per round instead of a
+        // take(1) plus a separate fold checkpoint (the wpTrained
+        // fusion, guide §2.6); the picked pair is read back from the
+        // checkpointed frame's constant columns by a local head()
+        val top = vocab
+          .select(col("freq"), syms.as("a"))
+          .select(col("freq"), col("a"), explode(expr(
+            "if(size(a) > 1, sequence(1, size(a) - 1), array_repeat(1, 0))"))
+            .as("i"))
+          .select(element_at(col("a"), col("i")).as("l"),
+            element_at(col("a"), col("i") + 1).as("r"), col("freq"))
+          .groupBy("l", "r").agg(sum("freq").as("cnt"))
+          .orderBy(col("cnt").desc, col("l"), col("r"))
+          .limit(1)
+        val folded = aggregate(syms, lit(""), (acc, x) =>
+          when(acc === "", x)
+            .when((acc === col("l") ||
+              acc.endsWith(concat(lit("·"), col("l")))) && x === col("r"),
+              concat(acc, x))
+            .otherwise(concat(acc, lit("·"), x)))
+        val next = vocab.crossJoin(broadcast(top))
+          .select(col("word"), col("freq"), folded.as("s"), col("l"),
+            col("r"), col("cnt"))
           .localCheckpoint()
-        val merges = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, String, String, Long)]
-        var round = 1
-        var exhausted = false
-        while (round <= bpeMergeRoundsK && !exhausted) {
-          val syms = split(col("s"), "·")
-          // top-1 argmax as a 1-row broadcast subquery riding the fold's
-          // checkpoint action — one heavy action per round instead of a
-          // take(1) plus a separate fold checkpoint (the wpTrained
-          // fusion, guide §2.6); the picked pair is read back from the
-          // checkpointed frame's constant columns by a local head()
-          val top = vocab
-            .select(col("freq"), syms.as("a"))
-            .select(col("freq"), col("a"), explode(expr(
-              "if(size(a) > 1, sequence(1, size(a) - 1), array_repeat(1, 0))"))
-              .as("i"))
-            .select(element_at(col("a"), col("i")).as("l"),
-              element_at(col("a"), col("i") + 1).as("r"), col("freq"))
-            .groupBy("l", "r").agg(sum("freq").as("cnt"))
-            .orderBy(col("cnt").desc, col("l"), col("r"))
-            .limit(1)
-          val folded = aggregate(syms, lit(""), (acc, x) =>
-            when(acc === "", x)
-              .when((acc === col("l") ||
-                acc.endsWith(concat(lit("·"), col("l")))) && x === col("r"),
-                concat(acc, x))
-              .otherwise(concat(acc, lit("·"), x)))
-          val next = vocab.crossJoin(broadcast(top))
-            .select(col("word"), col("freq"), folded.as("s"), col("l"),
-              col("r"), col("cnt"))
-            .localCheckpoint()
-          val h = next.select("l", "r", "cnt").head(1)
-          if (h.isEmpty) { release(next); exhausted = true }
-          else {
-            val (l, r, cnt) =
-              (h(0).getString(0), h(0).getString(1), h(0).getLong(2))
-            merges += ((round, l, r, l + r, cnt))
-            release(vocab)
-            vocab = next.select("word", "freq", "s")
-            round += 1
-          }
+        val h = next.select("l", "r", "cnt").head(1)
+        if (h.isEmpty) { Util.unpersistDeep(next); exhausted = true }
+        else {
+          val (l, r, cnt) =
+            (h(0).getString(0), h(0).getString(1), h(0).getLong(2))
+          merges += ((round, l, r, l + r, cnt))
+          Util.unpersistDeep(vocab)
+          vocab = next.select("word", "freq", "s")
+          round += 1
         }
-        (merges.toSeq, vocab)
-      })
+      }
+      (merges.toSeq, vocab)
     }
 
   private def bpeMergeRounds(s: SparkSession, dir: String): DataFrame = {

@@ -812,20 +812,6 @@ object UnigramOps {
     * absolute value, is what the argmax consumes). */
   private val wpScoreScale = 1000000000L
 
-  private val wpCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (Seq[(Int, String, String, String, Long, Long, Long, Long)], DataFrame)]
-  private val wpComputeLock = new Object
-
-  /** Unpersist + drop this session's WordPiece training cache — the
-    * [[Util.releaseCaches]] ladder's hook into this registry. */
-  private[queries] def releaseWpCache(s: SparkSession): Unit =
-    wpComputeLock.synchronized {
-      wpCache.filterInPlace { case (k, (_, df)) =>
-        if (k._1 eq s) { df.unpersist(); false } else true
-      }
-    }
-
   /** WordPiece TRAINING loop (Schuster & Nakajima 2012; the BERT
     * vocabulary builder) — the missing half of the third tokenizer
     * family, next to the runtime segmenter [[wordpieceGreedyAudit]]
@@ -855,77 +841,68 @@ object UnigramOps {
   private def wpTrained(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, String, Long, Long, Long, Long)],
          DataFrame) =
-    wpComputeLock.synchronized {
-      wpCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      wpCache.getOrElseUpdate((s, dir), {
-        def release(df: DataFrame): Unit =
-          df.queryExecution.analyzed.foreach {
-            case r: org.apache.spark.sql.execution.LogicalRDD =>
-              r.rdd.unpersist(blocking = false)
-            case _ => ()
-          }
-        var vocab = wordFreq(s, dir)
-          .select(col("word"), col("freq"),
-            array_join(expr("regexp_extract_all(word, '.', 0)"), "·").as("s"))
+    Util.cached(s, dir, "wpTrained", "") {
+      var vocab = wordFreq(s, dir)
+        .select(col("word"), col("freq"),
+          array_join(expr("regexp_extract_all(word, '.', 0)"), "·").as("s"))
+        .localCheckpoint()
+      val merges = scala.collection.mutable.ArrayBuffer
+        .empty[(Int, String, String, String, Long, Long, Long, Long)]
+      var round = 1
+      var exhausted = false
+      while (round <= wpTrainK && !exhausted) {
+        val syms = split(col("s"), "·")
+        val padded = concat(array(lit("^")), syms, array(lit("$")))
+        val pp = vocab.select(col("freq"), padded.as("a"))
+          .select(col("freq"), col("a"),
+            explode(expr("sequence(1, size(a) - 1)")).as("i"))
+          .select(element_at(col("a"), col("i")).as("l"),
+            element_at(col("a"), col("i") + 1).as("r"), col("freq"))
+        val sc = pp.filter(col("l") =!= "^")
+          .groupBy(col("l").as("sym")).agg(sum("freq").as("scnt"))
+        // the top-1 argmax stays a 1-ROW SUBQUERY instead of a collect:
+        // broadcast-cross-joined into the fold, ONE localCheckpoint
+        // action per round computes pair stats, argmax and the folded
+        // next state together (the round's former two heavy actions —
+        // a take(1) over the scored pairs and then the fold checkpoint
+        // — each re-ran the pair aggregate's input; guide §2.6). The
+        // picked pair's columns ride the checkpointed frame as
+        // constants and are read back by a trivial local head().
+        val top = pp.filter(col("l") =!= "^" && col("r") =!= "$")
+          .groupBy("l", "r").agg(sum("freq").as("cnt"))
+          .join(sc.select(col("sym").as("l"), col("scnt").as("lcnt")), "l")
+          .join(sc.select(col("sym").as("r"), col("scnt").as("rcnt")), "r")
+          .withColumn("score_nano",
+            expr(s"(cnt * $wpScoreScale) div (lcnt * rcnt)"))
+          .orderBy(col("score_nano").desc, col("l"), col("r"))
+          .limit(1)
+        // identical fold, with the pair as COLUMNS of the broadcast row
+        val folded = aggregate(syms, lit(""), (acc, x) =>
+          when(acc === "", x)
+            .when((acc === col("l") ||
+              acc.endsWith(concat(lit("·"), col("l")))) && x === col("r"),
+              concat(acc, x))
+            .otherwise(concat(acc, lit("·"), x)))
+        val next = vocab.crossJoin(broadcast(top))
+          .select(col("word"), col("freq"), folded.as("s"), col("l"),
+            col("r"), col("cnt"), col("lcnt"), col("rcnt"),
+            col("score_nano"))
           .localCheckpoint()
-        val merges = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, String, String, Long, Long, Long, Long)]
-        var round = 1
-        var exhausted = false
-        while (round <= wpTrainK && !exhausted) {
-          val syms = split(col("s"), "·")
-          val padded = concat(array(lit("^")), syms, array(lit("$")))
-          val pp = vocab.select(col("freq"), padded.as("a"))
-            .select(col("freq"), col("a"),
-              explode(expr("sequence(1, size(a) - 1)")).as("i"))
-            .select(element_at(col("a"), col("i")).as("l"),
-              element_at(col("a"), col("i") + 1).as("r"), col("freq"))
-          val sc = pp.filter(col("l") =!= "^")
-            .groupBy(col("l").as("sym")).agg(sum("freq").as("scnt"))
-          // the top-1 argmax stays a 1-ROW SUBQUERY instead of a collect:
-          // broadcast-cross-joined into the fold, ONE localCheckpoint
-          // action per round computes pair stats, argmax and the folded
-          // next state together (the round's former two heavy actions —
-          // a take(1) over the scored pairs and then the fold checkpoint
-          // — each re-ran the pair aggregate's input; guide §2.6). The
-          // picked pair's columns ride the checkpointed frame as
-          // constants and are read back by a trivial local head().
-          val top = pp.filter(col("l") =!= "^" && col("r") =!= "$")
-            .groupBy("l", "r").agg(sum("freq").as("cnt"))
-            .join(sc.select(col("sym").as("l"), col("scnt").as("lcnt")), "l")
-            .join(sc.select(col("sym").as("r"), col("scnt").as("rcnt")), "r")
-            .withColumn("score_nano",
-              expr(s"(cnt * $wpScoreScale) div (lcnt * rcnt)"))
-            .orderBy(col("score_nano").desc, col("l"), col("r"))
-            .limit(1)
-          // identical fold, with the pair as COLUMNS of the broadcast row
-          val folded = aggregate(syms, lit(""), (acc, x) =>
-            when(acc === "", x)
-              .when((acc === col("l") ||
-                acc.endsWith(concat(lit("·"), col("l")))) && x === col("r"),
-                concat(acc, x))
-              .otherwise(concat(acc, lit("·"), x)))
-          val next = vocab.crossJoin(broadcast(top))
-            .select(col("word"), col("freq"), folded.as("s"), col("l"),
-              col("r"), col("cnt"), col("lcnt"), col("rcnt"),
-              col("score_nano"))
-            .localCheckpoint()
-          val h = next.select("l", "r", "cnt", "lcnt", "rcnt", "score_nano")
-            .head(1)
-          if (h.isEmpty) { release(next); exhausted = true }
-          else {
-            val r0 = h(0)
-            val (l, r) = (r0.getAs[String]("l"), r0.getAs[String]("r"))
-            merges += ((round, l, r, l + r, r0.getAs[Long]("cnt"),
-              r0.getAs[Long]("lcnt"), r0.getAs[Long]("rcnt"),
-              r0.getAs[Long]("score_nano")))
-            release(vocab)
-            vocab = next.select("word", "freq", "s")
-            round += 1
-          }
+        val h = next.select("l", "r", "cnt", "lcnt", "rcnt", "score_nano")
+          .head(1)
+        if (h.isEmpty) { Util.unpersistDeep(next); exhausted = true }
+        else {
+          val r0 = h(0)
+          val (l, r) = (r0.getAs[String]("l"), r0.getAs[String]("r"))
+          merges += ((round, l, r, l + r, r0.getAs[Long]("cnt"),
+            r0.getAs[Long]("lcnt"), r0.getAs[Long]("rcnt"),
+            r0.getAs[Long]("score_nano")))
+          Util.unpersistDeep(vocab)
+          vocab = next.select("word", "freq", "s")
+          round += 1
         }
-        (merges.toSeq, vocab)
-      })
+      }
+      (merges.toSeq, vocab)
     }
 
   /** The trained merge table, one row per round: the pair picked, its

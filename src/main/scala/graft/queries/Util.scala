@@ -19,16 +19,10 @@ final case class Q(
 
 object Util {
 
-  /** Sessions that already have the drop-metric logger registered (weak so a
-    * stopped session can be collected — same hygiene as the query caches). */
-  private val dropLoggerSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
   /** Attach a named observation to `df` counting keys a hot-key/bucket cap
-    * dropped, and register (once per session) a listener that logs any
-    * nonzero `graft_drop_*` metric after each action.
+    * dropped. [[graft.functions.GraftFunctions.register]], which [[t]] runs
+    * on every session that reads a table, installs the listener that logs
+    * any nonzero `graft_drop_*` metric after each action.
     *
     * This is the "log the drop" half of every df-cap in the dedup/similarity
     * suite: the metric rides the existing job as a CollectMetrics node —
@@ -44,95 +38,147 @@ object Util {
     * also visible as an empty/near-empty RESULT, so the signal is not
     * silent — but the drop count itself is best-effort under AQE. */
   def withDropMetric(s: SparkSession, df: DataFrame, name: String,
-      dropped: Column): DataFrame = {
-    if (dropLoggerSessions.add(s)) {
-      s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit =
-          qe.observedMetrics.foreach { case (metricName, row) =>
-            if (metricName.startsWith("graft_drop_") &&
-                row.toSeq.exists { case l: Long => l != 0L; case _ => false })
-              System.err.println(s"[graft] $metricName dropped hot keys: $row")
-          }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      })
-    }
+      dropped: Column): DataFrame =
     df.observe(name, coalesce(dropped, lit(0L)).as("n_dropped"))
-  }
 
-  /** Session-lifetime cache of persisted intermediate relations, keyed by
-    * (session, dir, relation name, knob fingerprint) — the lshCache
-    * contract generalized: a repeated call reuses the SAME persisted
-    * relation instead of stacking a fresh InMemoryRelation per invocation
-    * (the leak a long-lived notebook/Thrift session would otherwise
-    * accumulate), and retuning a knob in-session evicts + unpersists the
-    * superseded entry instead of leaking it. Entries for stopped sessions
-    * are dropped on every access so the map can't pin dead sessions.
+  /** One session cache entry: its value while resident, and how often it
+    * was built and served. The entry is its own lock, so a miss path that
+    * runs Spark jobs (a checkpoint, a training loop) is paid once per key
+    * while other keys build beside it. A build may fetch other keys
+    * (ccLabels → ccEdges), never its own. Counts outlive a release, so a
+    * rebuild shows as builds > 1. */
+  private final class Entry {
+    @volatile var value: Option[Any] = None
+    @volatile var builds = 0
+    @volatile var hits = 0
+    /** Drop the value and free every DataFrame it holds; true if resident. */
+    def free(): Boolean = synchronized {
+      value.foreach(frames(_).foreach(unpersistDeep))
+      val was = value.nonEmpty
+      value = None
+      was
+    }
+  }
+  private final case class Key(s: SparkSession, dir: String, name: String,
+      knobs: String)
+
+  /** The session cache registry: every intermediate a session reuses across
+    * queries — lazily persisted relations ([[cachedRelation]]), eager
+    * checkpoints (CC labels and edges, built serve graphs), trained
+    * tokenizer state and driver-side loop results (k-means rounds). A
+    * repeated call returns the SAME value instead of stacking a fresh one
+    * per invocation (the leak a long-lived notebook/Thrift session would
+    * otherwise accumulate); the same name back under new knobs releases
+    * the superseded entry instead of leaking it; entries of stopped
+    * sessions are dropped on every access so the map can't pin dead
+    * sessions.
     *
-    * The persist this hands out is LAZY: `build` must not run an action,
-    * so schema/explain-only callers stay job-free. */
-  private val relCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, String), DataFrame]
+    * Staleness contract: entries are keyed on (session, dir, name, knobs);
+    * if the DATA under dir is regenerated mid-session the cached value is
+    * stale by design — same contract as Spark's own table cache over
+    * external files. */
+  private val registry = scala.collection.concurrent.TrieMap.empty[Key, Entry]
+
+  /** The value cached under (session, dir, name, knobs), built by `build`
+    * on the first call — once, however many threads ask at the same time. */
+  def cached[T](s: SparkSession, dir: String, name: String, knobs: String)
+      (build: => T): T = {
+    registry.filterInPlace((k, _) => !k.s.sparkContext.isStopped)
+    val key = Key(s, dir, name, knobs)
+    val e = registry.getOrElseUpdate(key, new Entry)
+    if (e.value.isEmpty) registry.foreach { case (k, old) =>
+      if ((k.s eq s) && k.dir == dir && k.name == name && k != key)
+        old.free()
+    }
+    e.synchronized {
+      e.value match {
+        case Some(v) => e.hits += 1; v.asInstanceOf[T]
+        case None =>
+          val v = build
+          e.value = Some(v)
+          e.builds += 1
+          v
+      }
+    }
+  }
+
+  /** [[cached]] for a relation persisted LAZILY: `build` must not run an
+    * action, so schema/explain-only callers stay job-free and the first
+    * action fills the cache for every later consumer. */
   def cachedRelation(s: SparkSession, dir: String, name: String,
-      knobs: String)(build: => DataFrame): DataFrame = {
-    relCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val key = (s, dir, name, knobs)
-    relCache.getOrElseUpdate(key, {
-      relCache.keys
-        .filter(k => k._1 == s && k._2 == dir && k._3 == name && k != key)
-        .foreach(k => relCache.remove(k).foreach(_.unpersist()))
-      build.persist()
-    })
+      knobs: String)(build: => DataFrame): DataFrame =
+    cached(s, dir, name, knobs)(build.persist())
+
+  /** The DataFrames a cached value holds: the value itself, the members of
+    * a Seq or the fields of a tuple (BPE's (merges, state) pair). */
+  private def frames(v: Any): Seq[DataFrame] = v match {
+    case df: org.apache.spark.sql.Dataset[_] => Seq(df.toDF())
+    case xs: Iterable[_] => xs.toSeq.flatMap(frames)
+    case p: Product => p.productIterator.toSeq.flatMap(frames)
+    case _ => Nil
   }
 
-  /** Explicit unpersist ladder for a long-lived session: drop and
-    * unpersist EVERY session-cached relation this session owns — the
-    * [[cachedRelation]] registry plus each file's private registries
-    * (quantized base + LSH state, CC labels/edges, basket/pair
-    * relations, BPE training). The per-entry eviction above handles
-    * knob retuning; this
-    * handles the end of a work phase (a notebook finishing its dedup
-    * pass, a server rotating corpora) where the right amount of cached
-    * state is zero. Persisted levels are MEMORY_AND_DISK, so between
-    * phases Spark would otherwise spill-age these blocks instead of
-    * freeing them — the ladder makes reclamation deterministic.
-    * Correctness is untouched: the next query rebuilds lazily
-    * (CacheHygieneSpec pins both). */
-  def releaseCaches(s: SparkSession): Unit = {
-    relCache.filterInPlace { case (k, df) =>
-      if (k._1 eq s) { df.unpersist(); false } else true
+  /** The RDDs whose blocks `df` holds. A persisted frame holds its
+    * in-memory relation's buffers (none until an action fills them). Any
+    * other frame is a localCheckpoint, or a projection of one, and holds
+    * the checkpoint RDDs its plan reads: `Dataset.unpersist` only clears
+    * CacheManager entries, and checkpoint blocks are RDD-level persists.
+    * The plan walk never runs on a persisted frame, whose plan may read
+    * another live entry's checkpoint (wordpieceVocab reads wpTrained's). */
+  def heldRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.sparkSession.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]) match {
+      case Some(c) =>
+        val b = c.cachedRepresentation.cacheBuilder
+        if (b.isCachedColumnBuffersLoaded) Seq(b.cachedColumnBuffers) else Nil
+      case None => df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }
     }
-    SimilarityOps.releaseBase(s)
-    SimilarityOps.releaseServeGraphCaches(s) // ckpt'd built graphs too
-    DedupOps.releaseCcCaches(s)
-    GraphOps.releaseGraphCaches(s)
-    TextOps.releaseBpeCache(s)
-    UnigramOps.releaseWpCache(s)
-  }
 
-  /** Family-scoped release: unpersist + drop this session's
-    * [[cachedRelation]] entries whose NAME starts with one of the given
-    * prefixes, leaving every other family's warm state alone. The
-    * all-or-nothing [[releaseCaches]] is the end-of-phase ladder; this is
-    * the end-of-FAMILY one — the r15 finding: the HyperANF register
-    * levels (|V|·m rows × up to [[graft.queries.GraphOps.hanfMaxRounds]]
-    * MEMORY_AND_DISK levels) stayed resident for the whole session after
-    * their last consumer ran, and the measured cost was displacement of
-    * unrelated queries' warm state (pagerank_links 2.6 → 5.6 s in-suite),
-    * not their own runtime. Returns how many entries were released so a
-    * caller (Bench's family boundary, CacheAudit) can log the action. */
-  def releaseFamily(s: SparkSession, namePrefixes: String*): Int = {
-    var released = 0
-    relCache.filterInPlace { case (k, df) =>
-      if ((k._1 eq s) && namePrefixes.exists(k._3.startsWith)) {
-        df.unpersist(); released += 1; false
-      } else true
+  /** Free what `df` holds: unpersist a persisted frame; release the
+    * checkpoint blocks of any other. A released checkpoint has no lineage
+    * to recompute from, so nothing may read `df` afterwards. */
+  def unpersistDeep(df: DataFrame): Unit =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      df.unpersist()
+    else heldRdds(df).foreach(_.unpersist(blocking = false))
+
+  /** A registry entry as the audit and the release checks see it. */
+  final case class CacheStat(dir: String, name: String, knobs: String,
+      builds: Int, hits: Int, resident: Boolean, frames: Seq[DataFrame])
+
+  /** This session's registry entries, resident or released, by name. */
+  def cacheStats(s: SparkSession): Seq[CacheStat] =
+    registry.toSeq.collect { case (k, e) if k.s eq s =>
+      val v = e.value
+      CacheStat(k.dir, k.name, k.knobs, e.builds, e.hits, v.nonEmpty,
+        v.toSeq.flatMap(frames))
+    }.sortBy(c => (c.name, c.knobs, c.dir))
+
+  /** Family-scoped release: free this session's entries whose NAME starts
+    * with one of the given prefixes, leaving every other family's warm
+    * state alone. The end-of-FAMILY boundary — the r15 finding: the
+    * HyperANF register levels (|V|·m rows × up to
+    * [[graft.queries.GraphOps.hanfMaxRounds]] MEMORY_AND_DISK levels)
+    * stayed resident for the whole session after their last consumer ran,
+    * and the measured cost was displacement of unrelated queries' warm
+    * state (pagerank_links 2.6 → 5.6 s in-suite), not their own runtime.
+    * Returns how many resident entries were released so a caller (Bench's
+    * release schedule, CacheAudit) can log the action. */
+  def releaseFamily(s: SparkSession, namePrefixes: String*): Int =
+    registry.count { case (k, e) =>
+      (k.s eq s) && namePrefixes.exists(k.name.startsWith) && e.free()
     }
-    released
-  }
+
+  /** The end-of-phase ladder for a long-lived session: free EVERY entry
+    * this session owns (a notebook finishing its dedup pass, a server
+    * rotating corpora), where the right amount of cached state is zero.
+    * Persisted levels are MEMORY_AND_DISK, so between phases Spark would
+    * otherwise spill-age these blocks instead of freeing them — the ladder
+    * makes reclamation deterministic. Correctness is untouched: the next
+    * query rebuilds (CacheHygieneSpec pins both). */
+  def releaseCaches(s: SparkSession): Unit = releaseFamily(s, "")
 
   /** Read one testdata table.
     *

@@ -2,15 +2,21 @@ package graft.tools
 
 import graft.SparkEntry
 
-/** Storage-memory audit of the session-cache family (verdict task: the
-  * cachedRelation registry has ~10 members — measure them under a scale
-  * corpus and document eviction). Runs a cache-heavy query set against a
-  * dir, then reports every persisted RDD with its memory/disk footprint
-  * and the executor storage ceiling, re-measures after
-  * [[graft.queries.Util.releaseCaches]], and prints ONE JSON line (the
-  * ScaleCheck discipline).
+/** Storage-memory audit of the session cache registry
+  * ([[graft.queries.Util.cached]]). Runs a cache-heavy query set against a
+  * dir, then reports every persisted RDD with its memory/disk footprint,
+  * every registry entry (name, knobs, builds, hits, and the bytes its
+  * DataFrames hold while resident) and the executor storage ceiling,
+  * re-measures after [[graft.queries.Util.releaseCaches]], and prints ONE
+  * JSON line (the ScaleCheck discipline).
   *
-  * Usage: runMain graft.tools.CacheAudit <dataDir> [query ...] */
+  * Besides query names the list takes two commands: `RELEASE` runs the
+  * whole ladder, and `RELEASE:<prefix>[,<prefix>...]` frees the cache
+  * families with those name prefixes ([[graft.queries.Util.releaseFamily]],
+  * the step Bench's release schedule takes) and logs the storage left.
+  *
+  * Usage: runMain graft.tools.CacheAudit <dataDir> [query | RELEASE |
+  * RELEASE:<prefix>[,<prefix>...] ...] */
 object CacheAudit {
   private val defaultQueries = Seq(
     // one representative per session-cached relation family:
@@ -28,7 +34,8 @@ object CacheAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
-      throw new IllegalArgumentException("usage: CacheAudit <dataDir> [query ...]"))
+      throw new IllegalArgumentException("usage: CacheAudit <dataDir> " +
+        "[query | RELEASE | RELEASE:<prefix>[,<prefix>...] ...]"))
     val names = if (args.length > 1) args.drop(1).toSeq else defaultQueries
     val spark = graft.Session.local(graft.Session.cpus)
 
@@ -53,19 +60,11 @@ object CacheAudit {
         // query's working set exceed the heap
         graft.queries.Util.releaseCaches(spark)
         System.err.println("[cache-audit] RELEASE: ladder ran")
-      } else if (n == "RELEASE_HANF") {
-        // family boundary: drop just the HyperANF register levels (the
-        // Bench boundary's hook, runnable here to measure the footprint
-        // delta in the storage report)
-        val k = graft.queries.GraphOps.releaseHanfCaches(spark)
+      } else if (n.startsWith("RELEASE:")) {
+        val prefixes = n.stripPrefix("RELEASE:").split(",").toSeq
+        val k = graft.queries.Util.releaseFamily(spark, prefixes: _*)
         val (m, d, _) = storage()
-        System.err.println(s"[cache-audit] RELEASE_HANF: $k relations " +
-          s"released; storage now mem=${m / 1024 / 1024} MB " +
-          s"disk=${d / 1024 / 1024} MB")
-      } else if (n == "RELEASE_SERVE") {
-        val k = graft.queries.SimilarityOps.releaseServeGraphCaches(spark)
-        val (m, d, _) = storage()
-        System.err.println(s"[cache-audit] RELEASE_SERVE: $k relations " +
+        System.err.println(s"[cache-audit] $n: $k entries " +
           s"released; storage now mem=${m / 1024 / 1024} MB " +
           s"disk=${d / 1024 / 1024} MB")
       } else {
@@ -77,6 +76,16 @@ object CacheAudit {
     }
 
     val (memUsed, diskUsed, perRdd) = storage()
+    val bytesById = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val entries = graft.queries.Util.cacheStats(spark).map { c =>
+      val bytes = c.frames.flatMap(graft.queries.Util.heldRdds)
+        .map(r => bytesById.getOrElse(r.id, 0L)).sum
+      s"""{"name":${ScaleCheck.jsonString(c.name)},""" +
+        s""""knobs":${ScaleCheck.jsonString(c.knobs)},""" +
+        s""""builds":${c.builds},"hits":${c.hits},""" +
+        s""""resident":${c.resident},"bytes":$bytes}"""
+    }
     val maxStorage = spark.sparkContext.getExecutorMemoryStatus.values
       .map(_._1).sum // max storage+execution memory per executor
     graft.queries.Util.releaseCaches(spark)
@@ -89,7 +98,8 @@ object CacheAudit {
       s""""storage_ceiling_mb":${maxStorage / 1024 / 1024},""" +
       s""""after_release_mem_mb":${memAfter / 1024 / 1024},""" +
       s""""after_release_disk_mb":${diskAfter / 1024 / 1024},""" +
-      s""""rdds":[${perRdd.mkString(",")}]}""")
+      s""""rdds":[${perRdd.mkString(",")}],""" +
+      s""""entries":[${entries.mkString(",")}]}""")
     spark.stop()
   }
 }

@@ -22,7 +22,7 @@ class LazyPlanSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // forces a fresh (session, dir) cache entry in quantizedBase/lshCache:
+      // forces a fresh (session, dir) cache entry in quantizedBase/lshState:
       // sf0.001 may be shared with other suites, so flush pending events and
       // count relative to a settled baseline
       spark.sparkContext.range(0, 1).count()
